@@ -6,6 +6,7 @@ import org.apache.spark.internal.Logging
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanTransplant.reRoot
 import org.apache.spark.sql.expressions.Window
 
 /** Connected components over an edge list — the clustering step that
@@ -87,9 +88,9 @@ object Components extends Logging {
     // default: one (node,lbl) row is ~16 bytes, so ~250k rows/partition
     // keeps partitions a few MB. At bench scale that collapses 32
     // near-empty sort/join tasks per stage to 8; at 10^9 nodes it
-    // grows to thousands of partitions. Restored in the finally below
-    // (the loop is driver-blocking, so the scoped override can only
-    // leak into concurrent same-session queries — documented trade).
+    // grows to thousands of partitions. The loop runs on a scoped
+    // child session (Tuning.scoped), so the override never reaches the
+    // caller's session or a query planned on it concurrently.
     val nNodes = lab.count()
     val parts = math.max(8L, math.min(20000L, nNodes / 250000L + 1)).toInt
     // sym gains one SELF-loop row per node (from the already-computed
@@ -126,60 +127,54 @@ object Components extends Logging {
     // scheduling latency there).
     val small = nNodes < 4000000L
     def hint(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    if (small) spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      // Convergence by monotone label mass: labels only ever decrease,
-      // so sum(lbl) is strictly decreasing until the fixpoint and
-      // equality with the previous round means NO label moved. That
-      // replaces the old/new comparison join + filter-count with one
-      // single-row aggregate (exact DECIMAL sum — overflow-proof at
-      // any node count, order-independent).
-      var prevMass: java.math.BigDecimal = null
-      var iter = 0
-      var done = false
-      while (!done && iter < maxIter) {
-        val nbrMin = sym
-          .join(hint(lab.select(col("node").as("dst"), col("lbl").as("nlbl"))), Seq("dst"))
-          .groupBy(col("src").as("node"))
-          .agg(min(col("nlbl")).as("lbl"))
-        // pointer jump: lbl := lbl(lbl) — each jump is one more small
-        // self-join inside the same job and multiplies how far a round
-        // reaches. Intermediates are NOT checkpointed — recomputing
-        // cheap joins inside one job beats an extra materialization
-        // job per round; the lazy checkpoint of the final frame still
-        // bounds the plan at one round's depth.
-        val jumped = (1 to jumps).foldLeft(nbrMin) { (cur, _) =>
-          cur.join(hint(cur.select(col("node").as("lbl"), col("lbl").as("ll"))),
-              Seq("lbl"), "left")
-            .select(col("node"), coalesce(col("ll"), col("lbl")).as("lbl"))
-        }.localCheckpoint(false) // materialized by the mass agg: 1 job/round
-        val mass = jumped.agg(sum(col("lbl").cast("decimal(38,0)")).as("m"))
-          .head().getDecimal(0)
-        // the aggregate above materialized this round's checkpoint; the
-        // previous round's blocks can never be read again — free them
-        // now or the loop retains O(rounds) copies of the label state
-        freeCheckpoint(lab)
-        lab = jumped
-        // scale-insensitive compare; nulls (empty edge set) converge round 1
-        done = (mass == null && prevMass == null) ||
-          (mass != null && prevMass != null && mass.compareTo(prevMass) == 0)
-        prevMass = mass
-        iter += 1
-      }
-      if (!done)
-        logWarning(s"connectedComponents exhausted maxIter=$maxIter before " +
-          "label mass stabilized — returned labels are NOT converged " +
-          "(downstream dedup would under-merge); raise maxIter")
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+    val loop = Tuning.scoped(spark, Tuning.loopConf(parts, small): _*)
+    val symL = reRoot(loop, sym)
+    lab = reRoot(loop, lab)
+    // Convergence by monotone label mass: labels only ever decrease,
+    // so sum(lbl) is strictly decreasing until the fixpoint and
+    // equality with the previous round means NO label moved. That
+    // replaces the old/new comparison join + filter-count with one
+    // single-row aggregate (exact DECIMAL sum — overflow-proof at
+    // any node count, order-independent).
+    var prevMass: java.math.BigDecimal = null
+    var iter = 0
+    var done = false
+    while (!done && iter < maxIter) {
+      val nbrMin = symL
+        .join(hint(lab.select(col("node").as("dst"), col("lbl").as("nlbl"))), Seq("dst"))
+        .groupBy(col("src").as("node"))
+        .agg(min(col("nlbl")).as("lbl"))
+      // pointer jump: lbl := lbl(lbl) — each jump is one more small
+      // self-join inside the same job and multiplies how far a round
+      // reaches. Intermediates are NOT checkpointed — recomputing
+      // cheap joins inside one job beats an extra materialization
+      // job per round; the lazy checkpoint of the final frame still
+      // bounds the plan at one round's depth.
+      val jumped = (1 to jumps).foldLeft(nbrMin) { (cur, _) =>
+        cur.join(hint(cur.select(col("node").as("lbl"), col("lbl").as("ll"))),
+            Seq("lbl"), "left")
+          .select(col("node"), coalesce(col("ll"), col("lbl")).as("lbl"))
+      }.localCheckpoint(false) // materialized by the mass agg: 1 job/round
+      val mass = jumped.agg(sum(col("lbl").cast("decimal(38,0)")).as("m"))
+        .head().getDecimal(0)
+      // the aggregate above materialized this round's checkpoint; the
+      // previous round's blocks can never be read again — free them
+      // now or the loop retains O(rounds) copies of the label state
+      freeCheckpoint(lab)
+      lab = jumped
+      // scale-insensitive compare; nulls (empty edge set) converge round 1
+      done = (mass == null && prevMass == null) ||
+        (mass != null && prevMass != null && mass.compareTo(prevMass) == 0)
+      prevMass = mass
+      iter += 1
     }
+    if (!done)
+      logWarning(s"connectedComponents exhausted maxIter=$maxIter before " +
+        "label mass stabilized — returned labels are NOT converged " +
+        "(downstream dedup would under-merge); raise maxIter")
     freeCheckpoint(sym)
     freeCheckpoint(e) // sym (materialized) was its only consumer
-    lab
+    reRoot(spark, lab)
   }
 
   /** Hierarchy flatten: (node, parent) edges → (node, root, depth,
@@ -203,34 +198,32 @@ object Components extends Logging {
       cur.count() / 250000L + 1)).toInt
     val small = true // path strings stay dimension-sized; see CC for the gate
     def hint(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    try {
-      var iter = 0
-      var open = 1L
-      while (open > 0 && iter < maxIter) {
-        val anc = cur.select(col("node").as("anc"), col("anc").as("anc2"),
-          col("depth").as("d2"), col("path").as("p2"))
-        val stepped = cur.join(hint(anc), Seq("anc"), "left")
-          .select(col("node"),
-            when(col("anc") === -1L, lit(-1L))
-              .otherwise(coalesce(col("anc2"), lit(-1L))).as("anc"),
-            when(col("anc") === -1L, col("depth"))
-              .otherwise(col("depth") + coalesce(col("d2"), lit(0L)) + 1).as("depth"),
-            when(col("anc") === -1L, col("path"))
-              .otherwise(concat(coalesce(col("p2"), col("anc").cast("string")),
-                lit("/"), col("path"))).as("path"))
-          .localCheckpoint(false)
-        open = stepped.filter(col("anc") =!= -1L).count()
-        freeCheckpoint(cur)
-        cur = stepped
-        iter += 1
-      }
-      if (open > 0)
-        logWarning(s"hierarchyFlatten exhausted maxIter=$maxIter with $open " +
-          "unresolved nodes (cycle or depth > 2^maxIter)")
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    cur.select(col("node"),
+    cur = reRoot(Tuning.scoped(spark,
+      "spark.sql.shuffle.partitions" -> parts.toString), cur)
+    var iter = 0
+    var open = 1L
+    while (open > 0 && iter < maxIter) {
+      val anc = cur.select(col("node").as("anc"), col("anc").as("anc2"),
+        col("depth").as("d2"), col("path").as("p2"))
+      val stepped = cur.join(hint(anc), Seq("anc"), "left")
+        .select(col("node"),
+          when(col("anc") === -1L, lit(-1L))
+            .otherwise(coalesce(col("anc2"), lit(-1L))).as("anc"),
+          when(col("anc") === -1L, col("depth"))
+            .otherwise(col("depth") + coalesce(col("d2"), lit(0L)) + 1).as("depth"),
+          when(col("anc") === -1L, col("path"))
+            .otherwise(concat(coalesce(col("p2"), col("anc").cast("string")),
+              lit("/"), col("path"))).as("path"))
+        .localCheckpoint(false)
+      open = stepped.filter(col("anc") =!= -1L).count()
+      freeCheckpoint(cur)
+      cur = stepped
+      iter += 1
+    }
+    if (open > 0)
+      logWarning(s"hierarchyFlatten exhausted maxIter=$maxIter with $open " +
+        "unresolved nodes (cycle or depth > 2^maxIter)")
+    reRoot(spark, cur).select(col("node"),
         split(col("path"), "/").getItem(0).cast("long").as("root"),
         col("depth"), col("path"))
       .orderBy(col("node"))
@@ -315,10 +308,9 @@ object Components extends Logging {
     val parts = math.max(8L, math.min(20000L, nNodes / 250000L + 1)).toInt
     val small = nNodes < 4000000L
     def hint(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    if (small) spark.conf.set("spark.sql.adaptive.enabled", "false")
+    val loop = Tuning.scoped(spark, Tuning.loopConf(parts, small): _*)
+    val (eL, degL, nodesL) = (reRoot(loop, e), reRoot(loop, deg), reRoot(loop, nodes))
+    p = reRoot(loop, p)
     try {
       // Checkpoint every 4th round, not every round: each checkpoint
       // is a driver-scheduled materialization job, and on small graphs
@@ -330,11 +322,11 @@ object Components extends Logging {
       var lastCkpt = p
       var sinceCkpt = 0
       for (i <- 1 to iters) {
-        val contrib = e.join(hint(p), col("node") === col("src"))
-          .join(hint(deg), col("node") === col("dnode"))
+        val contrib = eL.join(hint(p), col("node") === col("src"))
+          .join(hint(degL), col("node") === col("dnode"))
           .select(col("dst").as("node"), expr("p DIV d").as("c"))
           .groupBy(col("node")).agg(sum(col("c")).as("s"))
-        p = nodes.join(hint(contrib), Seq("node"), "left")
+        p = nodesL.join(hint(contrib), Seq("node"), "left")
           .select(col("node"),
             (lit(150000L) +
               expr("850 * coalesce(s, 0) DIV 1000")).as("p"))
@@ -355,13 +347,11 @@ object Components extends Logging {
         freeCheckpoint(lastCkpt)
       }
     } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
       deg.unpersist(blocking = false)
       nodes.unpersist(blocking = false)
       freeCheckpoint(e)
     }
-    p
+    reRoot(spark, p)
   }
 
   /** Oracled PageRank instance: centrality over the verified near-dup

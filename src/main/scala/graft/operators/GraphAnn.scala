@@ -4,6 +4,7 @@ import graft.CacheRegistry.Tracked
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanTransplant.reRoot
 import org.apache.spark.sql.expressions.Window
 
 /** Graph-based approximate nearest neighbor — the HNSW/NSG family's
@@ -207,42 +208,34 @@ object GraphAnn {
   /** Shared driver: quantize/normalize, build, search, top-k — with
     * the Components small-graph fast path: below `smallN` vectors
     * (~50 MB of 64-dim rows, comfortably broadcastable) every
-    * loop-side join is broadcast-hinted and AQE is switched off, so a
-    * descent round / search hop is one classically-scheduled job
-    * instead of one job per query stage — at sandbox scale the loops
+    * loop-side join is broadcast-hinted and the loops run on an AQE-off
+    * [[Tuning.scoped]] child, so a descent round / search hop is one
+    * classically-scheduled job instead of one job per query stage; the
+    * result is re-rooted onto the caller. At sandbox scale the loops
     * are SCHEDULING-bound, not arithmetic-bound (the Components/Lloyd
     * lesson). Big corpora keep shuffle joins + AQE (runtime skew
     * splitting matters more than latency there). */
-  private def run(v: DataFrame, k: Int, degree: Int, rounds: Int,
+  private def run(v0: DataFrame, k: Int, degree: Int, rounds: Int,
                   initSeeds: Int, seeds: Int, beam: Int, hops: Int,
                   nQueries: Int, scoreName: String,
                   scoreOf: Column => Column,
                   better: (Column, Column) => Column): DataFrame = {
-    val spark = v.sparkSession
+    val spark = v0.sparkSession
     // one scalar agg — the sanctioned 1-row driver total (also sizes
     // the init bucket count)
-    val n = v.count()
+    val n = v0.count()
     val small = n < 100000L
     def hint(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    if (small) {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      // the only shuffles left under broadcast hints are the per-round
-      // top-degree windows over n·degree² candidate rows — 32 ~1 ms
-      // tasks per stage × ~10 checkpointed stages is pure scheduling
-      spark.conf.set("spark.sql.shuffle.partitions", "8")
-    }
-    try {
-      val edges = buildGraph(v, degree, rounds, initSeeds, n, better, hint)
-        .select(col("src"), col("dst"))
-      val visited = searchGraph(edges, v, v.filter(col("vec_id") < nQueries),
-        v.filter(col("vec_id") < seeds), beam, hops, better, hint)
-      topK(visited, k, scoreName, scoreOf(col("d")))
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-    }
+    // the only shuffles left under broadcast hints are the per-round
+    // top-degree windows over n·degree² candidate rows — 32 ~1 ms
+    // tasks per stage × ~10 checkpointed stages is pure scheduling
+    val loop = if (small) Tuning.scoped(spark, Tuning.loopConf(8, small): _*) else spark
+    val v = reRoot(loop, v0)
+    val edges = buildGraph(v, degree, rounds, initSeeds, n, better, hint)
+      .select(col("src"), col("dst"))
+    val visited = searchGraph(edges, v, v.filter(col("vec_id") < nQueries),
+      v.filter(col("vec_id") < seeds), beam, hops, better, hint)
+    reRoot(spark, topK(visited, k, scoreName, scoreOf(col("d"))))
   }
 
   def knnGraphExact(t: Tables, k: Int = 5, degree: Int = 10,

@@ -4,6 +4,7 @@ import graft.CacheRegistry.Tracked
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanTransplant.reRoot
 import org.apache.spark.sql.expressions.Window
 
 /** Approximate-nearest-neighbor search over an embedding column.
@@ -97,34 +98,32 @@ object Similarity {
     // classic scheduling collapses the round to one job; huge corpora
     // keep AQE (runtime skew handling matters more than latency there).
     val small = base.count() < 10000000L
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    if (small) spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      var assigned = base.withColumn("bucket", (col("neighbor_id") % nlist).cast("int"))
-      // persist() at each step cuts the lineage: without it, iteration k
-      // re-executes every previous Lloyd round each time the result (or
-      // the centroid broadcast) is materialized. cents.count() forces the
-      // round's frames THROUGH the caches so the previous round's blocks
-      // can be freed immediately — storage stays O(1) in iters instead of
-      // accumulating one persisted frame pair per Lloyd round
-      // (IvfStorageSpec pins this).
-      var cents: DataFrame = centroidsOf(assigned).persistTracked()
-      for (_ <- 0 until iters) {
-        val (prevA, prevC) = (assigned, cents)
-        val scored = base.crossJoin(broadcast(cents))
-          .withColumn("sim", cosine(col("cv"), col("centroid")))
-        assigned = scored
-          .groupBy(col("neighbor_id"))
-          .agg(max_by(col("bucket"), struct(col("sim"), col("bucket"))).as("bucket"),
-            first(col("cv")).as("cv"))
-          .persistTracked()
-        cents = centroidsOf(assigned).persistTracked()
-        cents.count() // materializes assigned + cents into their caches
-        prevA.unpersist(false) // no-op for the unpersisted round-0 seed
-        prevC.unpersist(false)
-      }
-      (assigned, cents)
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+    val loop = if (small) Tuning.scoped(spark, Tuning.AqeOff) else spark
+    val baseL = reRoot(loop, base)
+    var assigned = baseL.withColumn("bucket", (col("neighbor_id") % nlist).cast("int"))
+    // persist() at each step cuts the lineage: without it, iteration k
+    // re-executes every previous Lloyd round each time the result (or
+    // the centroid broadcast) is materialized. cents.count() forces the
+    // round's frames THROUGH the caches so the previous round's blocks
+    // can be freed immediately — storage stays O(1) in iters instead of
+    // accumulating one persisted frame pair per Lloyd round
+    // (IvfStorageSpec pins this).
+    var cents: DataFrame = centroidsOf(assigned).persistTracked()
+    for (_ <- 0 until iters) {
+      val (prevA, prevC) = (assigned, cents)
+      val scored = baseL.crossJoin(broadcast(cents))
+        .withColumn("sim", cosine(col("cv"), col("centroid")))
+      assigned = scored
+        .groupBy(col("neighbor_id"))
+        .agg(max_by(col("bucket"), struct(col("sim"), col("bucket"))).as("bucket"),
+          first(col("cv")).as("cv"))
+        .persistTracked()
+      cents = centroidsOf(assigned).persistTracked()
+      cents.count() // materializes assigned + cents into their caches
+      prevA.unpersist(false) // no-op for the unpersisted round-0 seed
+      prevC.unpersist(false)
+    }
+    (reRoot(spark, assigned), reRoot(spark, cents))
   }
 
   /** Two-level coarse quantizer — the FAISS IMI/two-level rule that

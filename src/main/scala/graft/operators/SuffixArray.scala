@@ -4,6 +4,7 @@ import graft.CacheRegistry.Tracked
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanTransplant.reRoot
 
 /** Distributed suffix-array construction by prefix doubling
   * (Manber & Myers 1993; the shuffle-based formulation of Flick &
@@ -156,21 +157,20 @@ object SuffixArray {
     val n = docs.agg(coalesce(sum(length(col("text"))), lit(0L)).cast("long"))
       .head.getLong(0)
     val parts = math.max(8L, math.min(20000L, n / 250000L + 1)).toInt
-    val loopSpark = docs.sparkSession.newSession()
-    loopSpark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    if (n < 4000000L) loopSpark.conf.set("spark.sql.adaptive.enabled", "false")
+    val loopSpark = Tuning.scoped(docs.sparkSession,
+      Tuning.loopConf(parts, small = n < 4000000L): _*)
     val wins = Dedup.spread(docs.select(col("doc_id"), col("text")))
       .filter(length(col("text")) >= 1) // sequence(1, len) must ascend
       .select(col("doc_id"),
         explode(sequence(lit(1), length(col("text")))).as("i"), col("text"))
       .select(col("doc_id"), col("i").cast("long").as("off"),
         col("text").substr(col("i"), lit(seedLen)).as("w"))
-    // r19: re-root the LOGICAL plan instead of createDataFrame(wins.rdd)
-    // — the .rdd form decoded + re-encoded every (doc, off, window) row
-    // and ran the explode/substr pass under the caller's conf; the
+    // r19: re-root the plan instead of createDataFrame(wins.rdd) — the
+    // .rdd form decoded + re-encoded every (doc, off, window) row and
+    // ran the explode/substr pass under the caller's conf; the
     // transplant moves zero rows and the loop tuning covers the window
     // build too
-    val w0 = org.apache.spark.sql.graft.PlanTransplant.reRoot(loopSpark, wins)
+    val w0 = reRoot(loopSpark, wins)
       .localCheckpoint() // eager — the one materialization of the window table
     val groups = Curation.globalRowNumber(
         w0.select(col("w")).distinct(), col("w"))
@@ -189,17 +189,17 @@ object SuffixArray {
     * round schedules as one classic job (per-round JOB LATENCY, not
     * data, dominates small-corpus doubling).
     *
-    * The tuning lives on an ISOLATED child session:
-    * `spark.newSession()` shares the SparkContext — and therefore the
-    * localCheckpoint block store — but owns its SQLConf, so the
-    * loop-sized shuffle partitions and the AQE switch never apply to a
-    * plan compiled concurrently on the caller's session (parallel
-    * suites, another operator), and a body failure mid-loop has
-    * nothing to restore: the child session's conf simply dies with it
-    * (orphaned round checkpoints are unpersisted by the
-    * ContextCleaner when their RDDs are collected). The callback
-    * receives the checkpointed char table re-rooted in the child
-    * session and the one-round function. */
+    * The tuning lives on the caller's [[Tuning.scoped]] child: it
+    * shares the SparkContext — and therefore the localCheckpoint block
+    * store — but owns its SQLConf, so the loop-sized shuffle partitions
+    * and the AQE switch never apply to a plan compiled concurrently on
+    * the caller's session (parallel suites, another operator), and a
+    * body failure mid-loop has nothing to restore (orphaned round
+    * checkpoints are unpersisted by the ContextCleaner when their RDDs
+    * are collected). The child is cached per (caller conf, overrides),
+    * so repeated calls reuse it; the returned frame stays on it. The
+    * callback receives the checkpointed char table re-rooted in the
+    * child and the one-round function. */
   private def withLoopTuning(docs: DataFrame)(
       body: (DataFrame, (DataFrame, Long) => DataFrame) => DataFrame)
       : DataFrame = {
@@ -211,13 +211,12 @@ object SuffixArray {
     val n = docs.agg(coalesce(sum(length(col("text"))), lit(0L)).cast("long"))
       .head.getLong(0)
     val parts = math.max(8L, math.min(20000L, n / 250000L + 1)).toInt
-    val loopSpark = docs.sparkSession.newSession()
-    loopSpark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    if (n < 4000000L) loopSpark.conf.set("spark.sql.adaptive.enabled", "false")
+    val loopSpark = Tuning.scoped(docs.sparkSession,
+      Tuning.loopConf(parts, small = n < 4000000L): _*)
     val chars = charRanks(docs)
-    // r19: logical-plan transplant, not createDataFrame(chars.rdd) —
-    // see withSeedTuning
-    val r0 = org.apache.spark.sql.graft.PlanTransplant.reRoot(loopSpark, chars)
+    // r19: plan transplant, not createDataFrame(chars.rdd) — see
+    // withSeedTuning
+    val r0 = reRoot(loopSpark, chars)
       .localCheckpoint() // eager — the one materialization of the char table
     body(r0, doubleRound)
   }

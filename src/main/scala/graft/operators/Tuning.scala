@@ -2,76 +2,82 @@ package graft.operators
 
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.PlanTransplant
 
-/** Small-input scheduling discipline for DEEP composite plans — the
-  * operator-level analogue of the loop fast paths in Components /
-  * GraphAnn / Similarity.ivfAssign, extended to cover the RETURNED
-  * frame's execution, not just intra-operator materializations.
+/** The one way an operator tunes the session its plans run under.
   *
-  * AQE executes one job per query stage: runtime skew splitting and
-  * partition coalescing that pay for themselves on cluster-scale
-  * shuffles, but on an input that fits a broadcast the per-stage job
-  * round-trips are pure scheduling latency. A multi-stage composite
-  * build (Lloyd rounds + residual codebooks + rank windows ≈ 30
-  * stages) then costs ~30 driver round-trips instead of one
-  * classically-scheduled job.
+  * [[scoped]] returns a CHILD of the caller's session: its clone (same
+  * SparkContext, cache manager and codegen cache; the caller's conf,
+  * temp views and functions copied) with the overrides applied. The
+  * caller's conf is never touched, so a query planned on it meanwhile
+  * never inherits loop-sized shuffle partitions or AQE off, and a
+  * failure mid-operator leaves nothing to restore. Frames move between
+  * the two with `PlanTransplant.reRoot` (zero rows moved); an action
+  * runs under the conf of the session its frame lives on:
+  *  - loop operators (Components, GraphAnn, Similarity.ivfAssign)
+  *    re-root their inputs into the child and their result back onto
+  *    the caller, whose action keeps the caller's conf;
+  *  - SuffixArray and [[smallInputPlan]] return frames that stay on the
+  *    child, pinning the tuning to the frame whoever materializes it;
+  *  - SnapshotStore runs its metadata-plane actions on an AQE-off child.
   *
-  * The callers' previous in-operator `conf.set` scoping could not fix
-  * this: the returned DataFrame is lazy, so the caller's ACTION ran
-  * after the conf was restored, under AQE again. Building the plan on
-  * a session whose conf has AQE off pins the tuning to the frame
-  * itself: whoever materializes it schedules the whole plan
-  * classically.
-  *
-  * Two costs measured and engineered away (r19):
-  *  - a fresh `newSession()` per call costs ~1.4 s of SessionState
-  *    bring-up — the AQE-off twin session is created ONCE per caller
-  *    session and cached ([[noAqeTwin]]);
-  *  - a row-count gate is a Spark job per call — the gate reads the
-  *    optimizer's BYTE statistics instead (`stats.sizeInBytes`, file
-  *    sizes for a parquet scan: driver-only, zero jobs).
-  *
-  * The gate is per-call and scale-adaptive: at or above the byte
-  * threshold the caller's session (and its AQE) governs, so at
-  * cluster scale every one of these operators keeps runtime skew
-  * handling.
-  *
-  * NOT applied blanket: measured per query (r19) — shallow plans and
-  * plans whose joins AQE upgrades to broadcast at runtime (bpe_encode,
-  * nb_classify, pipeline_e2e, soft_dedup, dedup_clusters…) run FASTER
-  * with AQE on, and keep it. Only operators that measured faster under
-  * classic scheduling opt in.
-  */
+  * Children are cached per (caller, caller's current conf, overrides),
+  * so a later `conf.set` on the caller yields a fresh child, never a
+  * stale one. At most [[MaxChildren]] are kept (least recently used
+  * out), each behind a soft reference: a child references its caller,
+  * so the cache never holds a caller past eviction or memory pressure. */
 object Tuning {
 
   /** Gate: driving inputs under ~256 MB (optimizer byte estimate)
     * schedule classically — far below any scale where AQE's runtime
-    * re-planning can recover its per-stage job latency.
-    * SPARK_GRAFT_SMALL_INPUT_BYTES overrides (0 disables — diagnosis). */
-  val SmallInputBytes: Long = sys.env.get("SPARK_GRAFT_SMALL_INPUT_BYTES")
-    .map(_.toLong).getOrElse(256L << 20)
+    * re-planning can recover its per-stage job latency. */
+  val SmallInputBytes: Long = 256L << 20
+  val MaxChildren = 16
+  val AqeOff: (String, String) = "spark.sql.adaptive.enabled" -> "false"
 
-  private val twins =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, SparkSession]()
+  /** Loop operators' overrides: shuffles sized to the loop state, and
+    * AQE off when per-round job latency, not data, dominates. */
+  def loopConf(parts: Int, small: Boolean): Seq[(String, String)] =
+    ("spark.sql.shuffle.partitions" -> parts.toString) +: (if (small) Seq(AqeOff) else Nil)
 
-  /** The caller session's AQE-off twin: same SparkContext, shared
-    * cache manager and codegen cache, own SQLConf — created once and
-    * reused (SessionState bring-up measured ~1.4 s, far above the win
-    * it would gate). */
-  private def noAqeTwin(spark: SparkSession): SparkSession =
-    twins.computeIfAbsent(spark, s => {
-      val c = s.newSession()
-      c.conf.set("spark.sql.adaptive.enabled", "false")
-      c
-    })
+  private type Key = (String, Map[String, String], Seq[(String, String)])
+  private type Ref = java.lang.ref.SoftReference[SparkSession]
+  private val children = new java.util.LinkedHashMap[Key, Ref](16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[Key, Ref]): Boolean =
+      size > MaxChildren
+  }
 
-  /** Build the operator's plan against the AQE-off twin session when
-    * `driving`'s optimizer byte estimate is far below cluster scale;
-    * at scale, build unchanged on the caller's session. */
+  /** `spark` with `overrides` applied, as a cached child session; no
+    * overrides is `spark` itself. */
+  def scoped(spark: SparkSession, overrides: (String, String)*): SparkSession =
+    if (overrides.isEmpty) spark
+    else children.synchronized {
+      val key = (PlanTransplant.sessionId(spark), spark.conf.getAll, overrides)
+      Option(children.get(key)).flatMap(r => Option(r.get)).getOrElse {
+        val child = PlanTransplant.cloneSession(spark)
+        overrides.foreach { case (k, v) => child.conf.set(k, v) }
+        children.put(key, new java.lang.ref.SoftReference(child))
+        child
+      }
+    }
+
+  /** Build a DEEP composite plan (Lloyd rounds + residual codebooks +
+    * rank windows ≈ 30 stages) on the caller's AQE-off child when
+    * `driving`'s optimizer byte estimate (file sizes for a parquet scan:
+    * zero jobs) is under [[SmallInputBytes]]. AQE runs one job per query
+    * stage, which pays off on cluster-scale shuffles but is pure
+    * scheduling latency on broadcast-sized inputs; at scale the caller's
+    * session (and its AQE skew handling) governs.
+    *
+    * NOT applied blanket: measured per query (r19) — shallow plans and
+    * plans whose joins AQE upgrades to broadcast at runtime
+    * (bpe_encode, nb_classify, pipeline_e2e, soft_dedup,
+    * dedup_clusters…) run FASTER with AQE on, and keep it. Only
+    * operators that measured faster under classic scheduling opt in. */
   def smallInputPlan(t: Tables, driving: DataFrame)
                     (build: Tables => DataFrame): DataFrame = {
     val bytes = driving.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (bytes >= SmallInputBytes || SmallInputBytes <= 0) build(t)
-    else build(t.copy(spark = noAqeTwin(t.spark)))
+    if (bytes >= SmallInputBytes) build(t)
+    else build(t.copy(spark = scoped(t.spark, AqeOff)))
   }
 }

@@ -2,6 +2,7 @@ package graft.sinks
 
 import java.nio.charset.StandardCharsets
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.graft.PlanTransplant
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Versioned snapshot log over parquet — the manifest layer
@@ -53,22 +54,18 @@ object SnapshotStore {
     * stateless). */
   private def store(path: String): LogStore = LogStore.forPath(path)
 
-  /** Run `f` with adaptive execution disabled on the session (saved
-    * and restored — the GraphAnn.run pattern). METADATA-plane actions
-    * only: the frames under these jobs are manifest/stats/tombstone-
-    * sized by construction (≤ files × tracked columns rows), so AQE's
-    * per-stage re-planning buys nothing and costs one extra scheduled
-    * job per query stage — measured at sf0.1, the commit verb chain
-    * drops from 38 to ~26 jobs and ~15% wall (tools.CommitProbe).
-    * Data-plane jobs — the user batch write, delete rewrites,
-    * compaction, the DV position join against the table — keep AQE:
-    * runtime skew/broadcast decisions matter there at scale. */
-  private def withMetaConf[A](spark: org.apache.spark.sql.SparkSession)(
-      f: => A): A = {
-    val prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try f finally spark.conf.set("spark.sql.adaptive.enabled", prev)
-  }
+  /** The caller's AQE-off [[graft.operators.Tuning.scoped]] child, for
+    * METADATA-plane actions only: the frames under these jobs are
+    * manifest/stats/tombstone-sized by construction (≤ files × tracked
+    * columns rows), so AQE's per-stage re-planning buys nothing and
+    * costs one extra scheduled job per query stage — measured at
+    * sf0.1, the commit verb chain drops from 38 to ~26 jobs and ~15%
+    * wall (tools.CommitProbe). Data-plane jobs — the user batch write,
+    * delete rewrites, compaction, the DV position join against the
+    * table — stay on the caller's session and keep AQE: runtime
+    * skew/broadcast decisions matter there at scale. */
+  private def metaSession(spark: SparkSession): SparkSession =
+    graft.operators.Tuning.scoped(spark, graft.operators.Tuning.AqeOff)
 
   private def snapDir(path: String) =
     store(path).child(path, "_snapshots")
@@ -679,12 +676,12 @@ object SnapshotStore {
   private def violationCounts(df: DataFrame,
                               cs: Seq[(String, String)]): Seq[(String, Long)] = {
     import org.apache.spark.sql.functions.{lit, sum, when}
-    val row = withMetaConf(df.sparkSession)(df.agg(
+    val row = PlanTransplant.reRoot(metaSession(df.sparkSession), df).agg(
       lit(1).as("_one"),
       cs.map { case (n, e) =>
         sum(when(graft.operators.DataQuality.violatesCheck(e), 1L)
           .otherwise(0L)).as(s"_v_$n")
-      }: _*).collect().head)
+      }: _*).collect().head
     cs.zipWithIndex.map { case ((n, _), i) =>
       n -> Option(row.get(i + 1)).fold(0L)(_.asInstanceOf[Long]) }
   }
@@ -879,10 +876,10 @@ object SnapshotStore {
         }.map(_.name).filterNot(declared.contains)
         val cols = (declared ++ auto).take(math.max(declared.size,
           statsAutoColumns))
-        val spark = df.sparkSession
+        val meta = metaSession(df.sparkSession)
         import org.apache.spark.sql.functions.{input_file_name, min, max,
           explode, array, struct, lit, col, when, floor, ceil}
-        import spark.implicits._
+        import meta.implicits._
         // DISTRIBUTED stats checkpoint (r16): per-file ranges land as a
         // parquet frame (file, column, lo, hi) under the version, never
         // as a driver-resident map — a 10⁷-file table's stats are a
@@ -960,7 +957,7 @@ object SnapshotStore {
         }
         val freshDF: Option[DataFrame] =
           if (fresh.isEmpty) None
-          else Some(spark.read.parquet(fresh: _*)
+          else Some(meta.read.parquet(fresh: _*)
             .groupBy(input_file_name().as("f"))
             .agg(aggs.head, aggs.tail: _*)
             .select(col("f"),
@@ -1008,9 +1005,9 @@ object SnapshotStore {
             case Some(st) =>
               val parts = math.max(1L,
                 fresh.size.toLong * cols.size / 100000L).toInt
-              withMetaConf(spark)(st.repartition(parts)
+              st.repartition(parts)
                 .write.mode(SaveMode.Overwrite)
-                .parquet(statsCheckDir(path, v)))
+                .parquet(statsCheckDir(path, v))
             case None => dropStatsCheckpoint(path, v)
           }
         } else {
@@ -1020,7 +1017,7 @@ object SnapshotStore {
           // rows. Never collected: frame-to-frame semi-join.
           val carriedDF: Option[DataFrame] =
             if (!isCarry) None
-            else statsDF(spark, path, prev).map { prevSt =>
+            else statsDF(meta, path, prev).map { prevSt =>
               prevSt.join(fullCarried.toDF("file"), Seq("file"), "left_semi")
             }
           (carriedDF.toSeq ++ freshDF.toSeq)
@@ -1035,9 +1032,9 @@ object SnapshotStore {
               // to ~400 files — the write and the pruning scan stay
               // distributed.)
               val parts = math.max(1L, newN * cols.size / 100000L).toInt
-              withMetaConf(spark)(st.repartition(parts)
+              st.repartition(parts)
                 .write.mode(SaveMode.Overwrite)
-                .parquet(statsCheckDir(path, v)))
+                .parquet(statsCheckDir(path, v))
             case None => dropStatsCheckpoint(path, v)
           }
         }
@@ -1206,15 +1203,16 @@ object SnapshotStore {
   private def prunedFiles(spark: SparkSession, path: String, v: Long,
                           key: String, lo: Long, hi: Long): Seq[String] = {
     import org.apache.spark.sql.functions.col
-    import spark.implicits._
-    statsDF(spark, path, v) match {
+    val meta = metaSession(spark)
+    import meta.implicits._
+    statsDF(meta, path, v) match {
       case None => manifest(path, v)
       case Some(st) =>
-        withMetaConf(spark)(manifestDF(spark, path, v)
+        manifestDF(meta, path, v)
           .join(st.filter(col("column") === key), Seq("file"), "left")
           .filter(col("lo").isNull ||
             (col("hi") >= lo && col("lo") <= hi))
-          .select("file").distinct().as[String].collect().toSeq.sorted)
+          .select("file").distinct().as[String].collect().toSeq.sorted
     }
   }
 
@@ -1229,8 +1227,9 @@ object SnapshotStore {
   private def prunedFilesEq(spark: SparkSession, path: String, v: Long,
                             key: String, value: String): Seq[String] = {
     import org.apache.spark.sql.functions.{col, lit}
-    import spark.implicits._
-    statsDF(spark, path, v) match {
+    val meta = metaSession(spark)
+    import meta.implicits._
+    statsDF(meta, path, v) match {
       case None => manifest(path, v)
       case Some(st) =>
         val vnum = scala.util.Try(value.toLong).toOption
@@ -1238,10 +1237,10 @@ object SnapshotStore {
           (lit(value) < col("slo") || lit(value) > col("shi"))
         val exclNum = vnum.map(n => col("lo").isNotNull &&
           (lit(n) < col("lo") || lit(n) > col("hi"))).getOrElse(lit(false))
-        withMetaConf(spark)(manifestDF(spark, path, v)
+        manifestDF(meta, path, v)
           .join(st.filter(col("column") === key), Seq("file"), "left")
           .filter(!(exclStr || exclNum) || col("column").isNull)
-          .select("file").distinct().as[String].collect().toSeq.sorted)
+          .select("file").distinct().as[String].collect().toSeq.sorted
     }
   }
 
@@ -1253,16 +1252,17 @@ object SnapshotStore {
                              key: String, lo: String, hi: String)
       : Seq[String] = {
     import org.apache.spark.sql.functions.{col, lit}
-    import spark.implicits._
-    statsDF(spark, path, v) match {
+    val meta = metaSession(spark)
+    import meta.implicits._
+    statsDF(meta, path, v) match {
       case None => manifest(path, v)
       case Some(st) =>
         val excl = col("slo").isNotNull &&
           (col("slo") > lit(hi) || col("shi") < lit(lo))
-        withMetaConf(spark)(manifestDF(spark, path, v)
+        manifestDF(meta, path, v)
           .join(st.filter(col("column") === key), Seq("file"), "left")
           .filter(!excl || col("column").isNull)
-          .select("file").distinct().as[String].collect().toSeq.sorted)
+          .select("file").distinct().as[String].collect().toSeq.sorted
     }
   }
 

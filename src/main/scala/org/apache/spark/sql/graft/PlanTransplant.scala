@@ -1,27 +1,31 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.classic.{Dataset, SparkSession => ClassicSession}
 
-/** Re-root a DataFrame's logical plan onto another session of the SAME
-  * SparkContext — the loop-tuning pattern (SuffixArray, child sessions
-  * with loop-sized shuffle partitions / AQE off) needs its input frame
-  * owned by the child session.
-  *
-  * The naive `child.createDataFrame(df.rdd, df.schema)` pays a full
-  * InternalRow → external Row decode plus a re-encode for every row
-  * (guide §1.4's `.rdd` warning), and executes the upstream plan under
-  * the CALLER's conf. Re-rooting the logical plan instead moves zero
-  * rows — the child session re-plans the same (session-agnostic,
-  * already-resolved) tree and executes it under its own conf, so the
-  * loop tuning covers the input materialization too.
-  *
-  * Lives in `org.apache.spark.sql.graft` for the same reason as
-  * [[GraftStreamSource]]: `Dataset.ofRows` is `private[sql]` — the
-  * documented extension-package pattern (Delta's sources use it the
-  * same way), touching only public-repo Spark internals. */
+/** Session plumbing behind `graft.operators.Tuning.scoped`. Lives in
+  * `org.apache.spark.sql.graft` for the same reason as
+  * [[GraftStreamSource]]: `cloneSession`, `sessionUUID` and
+  * `Dataset.ofRows` are `private[sql]` (the extension-package pattern
+  * Delta's sources use). */
 object PlanTransplant {
+
+  /** `df` on `target`, another session of the same SparkContext. The
+    * naive `target.createDataFrame(df.rdd, df.schema)` decodes and
+    * re-encodes every row and runs the upstream plan under the source
+    * session's conf; the transplant moves zero rows and the target plans
+    * the whole tree under its own conf. The ANALYZED plan travels, so a
+    * frame over one session's temp view or function still resolves in a
+    * session without it. */
   def reRoot(target: SparkSession, df: DataFrame): DataFrame =
-    org.apache.spark.sql.classic.Dataset.ofRows(
-      target.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
-      df.queryExecution.logical)
+    Dataset.ofRows(target.asInstanceOf[ClassicSession], df.queryExecution.analyzed)
+
+  /** A child of `spark`: same SparkContext, cache manager and codegen
+    * cache; its own copy of the SQLConf, temp views and functions. */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[ClassicSession].cloneSession()
+
+  /** The session's unique id — names a session without holding it. */
+  def sessionId(spark: SparkSession): String =
+    spark.asInstanceOf[ClassicSession].sessionUUID
 }
