@@ -103,10 +103,7 @@ object Enrichment {
       struct(w.as("x"), lit(0.0).as("y")),
       struct(w.as("x"), h.as("y")),
       struct(lit(0.0).as("x"), h.as("y")))
-    t.lineitem.select(
-        col("l_orderkey"), col("l_linenumber").cast("long").as("l_linenumber"),
-        GeoFunctions.areaCeilM2(ring).as("area_m2"))
-      .orderBy(col("l_orderkey"), col("l_linenumber"))
+    areaOfRing(t, ring, GeoFunctions.areaCeilM2)
   }
 
   /** R2+R3 geodesic variant: the same quad interpreted as a WGS84
@@ -125,11 +122,21 @@ object Enrichment {
       struct(lonW.as("x"), lat0.as("y")),
       struct(lonW.as("x"), latH.as("y")),
       struct(lon0.as("x"), latH.as("y")))
+    areaOfRing(t, ring, GeoFunctions.sphericalAreaCeilM2)
+  }
+
+  /** `area` of each lineitem's `ring`, with the ring projected once as a
+    * closed column first. The area helpers re-reference their ring in
+    * every lambda step, so an inline `array(struct…)` tree would be
+    * rebuilt and re-closed at each step of every row; a closed ring
+    * column is read as is (and the optimizer keeps the projection,
+    * since its consumer references it many times). */
+  private def areaOfRing(t: Tables, ring: Column, area: Column => Column): DataFrame =
     t.lineitem.select(
         col("l_orderkey"), col("l_linenumber").cast("long").as("l_linenumber"),
-        GeoFunctions.sphericalAreaCeilM2(ring).as("area_m2"))
+        GeoFunctions.closeRing(ring).as("ring"))
+      .select(col("l_orderkey"), col("l_linenumber"), area(col("ring")).as("area_m2"))
       .orderBy(col("l_orderkey"), col("l_linenumber"))
-  }
 
   /** R2 full `st_make_valid` parity: the ring is the same quad as
     * [[geoArea]] but every even order key traverses it in CROSSED

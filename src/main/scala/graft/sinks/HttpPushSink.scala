@@ -21,13 +21,15 @@ object HttpPushSink {
     def post(url: String, payload: String): Int
   }
 
+  private val DocumentId = raw""""documentId":"[^"]*/(\d+)"""".r
+
   /** Deterministic stand-in for the warehouse API: parses the document
     * id and fails every 97th document — enough structure to test retry/
     * logging paths without a network. */
   final class StubTransport extends PushTransport {
     override def post(url: String, payload: String): Int = {
       val id = payload.hashCode.toLong
-      val m = raw""""documentId":"[^"]*/(\d+)"""".r.findFirstMatchIn(payload)
+      val m = DocumentId.findFirstMatchIn(payload)
       m.map(_.group(1).toLong).getOrElse(math.abs(id)) % 97 match {
         case 0 => 500
         case _ => 200
@@ -59,17 +61,18 @@ object HttpPushSink {
         val pid = org.apache.spark.TaskContext.getPartitionId()
         val out = new java.io.PrintWriter(
           new java.io.File(logDir, f"push-$pid%05d.jsonl"), "UTF-8")
+        val target = s"$url?access_token=$token"
         try rows.foreach { r =>
           val (id, doc) = (r.getString(0), r.getString(1))
-          var status = transport.post(s"$url?access_token=$token", doc)
+          var status = transport.post(target, doc)
           var attempts = 1
           while (status >= 500 && attempts <= maxRetries) {
-            status = transport.post(s"$url?access_token=$token", doc)
+            status = transport.post(target, doc)
             attempts += 1
           }
           val level = if (status == 200) "INFO" else "ERROR"
           val line =
-            s"""{"level":"$level","documentId":"$id","status":$status,"attempts":$attempts,"url":"$url?access_token=$token"}"""
+            s"""{"level":"$level","documentId":"$id","status":$status,"attempts":$attempts,"url":"$target"}"""
           out.println(line.replace(token, "")) // redaction, as 2023.R:226
         } finally out.close()
       }
