@@ -8,10 +8,6 @@ object Bench {
         SparkSession.builder().master(s"local[$cpus]"), cpus.toInt)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_STATS_AUTO=n : cap/disable the all-column stats
-    // auto-extension for this run (diagnosis + wide-table knob)
-    sys.env.get("SPARK_GRAFT_STATS_AUTO").foreach(n =>
-      graft.sinks.SnapshotStore.statsAutoColumns = n.toInt)
     // SPARK_GRAFT_BENCH_ONLY=q_a,q_b : time a subset, N repeats each
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").toSet).getOrElse(Set.empty[String])

@@ -1,7 +1,7 @@
 package graft.sinks
 
 import java.nio.charset.StandardCharsets
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.graft.PlanTransplant
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
@@ -36,6 +36,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   * as a DataFrame by every pruning path, the Delta-checkpoint shape:
   * at 10⁵–10⁷ files the stats themselves are data, never a driver
   * map); row data moves only through distributed parquet read/write.
+  * Those stats are consulted in ONE place, [[statsPrune]]: the pruned
+  * reads, the stats-pruned rewrites (merge, MERGE INTO, delete,
+  * deletion-vector delete) and the optimistic rebase proof each hand
+  * it an exclusion over the recorded ranges, so a change to how files
+  * are ruled out lands there and nowhere else.
   * Same-host writers serialize on the same O_EXCL lock as
   * TableWriter.compact; committers that prepared against a stale
   * snapshot go through [[commitIf]]'s optimistic conditional publish
@@ -101,11 +106,9 @@ object SnapshotStore {
 
   /** Cap on the TOTAL number of columns the all-column stats layer
     * tracks per commit (r18; Delta's
-    * `dataSkippingNumIndexedCols = 32` knob). Declared keys always
-    * record; the auto-extension fills up to this cap. Lower it on
-    * very wide tables where the per-commit stats aggregate dominates
-    * commit latency. */
-  @volatile var statsAutoColumns: Int = 32
+    * `dataSkippingNumIndexedCols = 32` default). Declared keys always
+    * record; the auto-extension fills up to this cap. */
+  private val StatsAutoColumns = 32
 
   /** Parsed manifest: FULL (`paths` defined) or DELTA (`base` = v−1,
     * `adds`/`drops` relative to it). `n` is the manifest's recorded
@@ -312,30 +315,19 @@ object SnapshotStore {
         s"restore: v$version is not retained under $path")
       if (version == head) head
       else {
-        val st = store(path)
         val nv = head + 1
         dropStatsArtifacts(path, nv) // crashed-commit leftovers
         atomicWrite(schemaFile(path, nv),
           tableSchema(spark, path, version).json)
         writeColmap(path, nv, columnMapping(path, version))
-        val hdr = statsFile(path, version)
-        if (st.exists(hdr)) atomicWrite(statsFile(path, nv),
-          st.readString(hdr))
+        carrySidecar(path, statsFile(path, version), statsFile(path, nv))
         consolidateStatsByCopy(path, version, nv)
         // consolidate the masks visible AT the restored version into
         // the new head's sidecar, then plant the reset marker — the
         // marker also kills (version, head] masks when the restored
         // version had none
-        val dvs = dvVersionsUpTo(path, version)
-          .map(dvDir(path, _)).filter(st.exists)
-        if (dvs.nonEmpty) {
-          val dst = dvDir(path, nv)
-          st.mkdirs(dst)
-          dvs.foreach { d =>
-            st.list(d).filter(e => !e.isDir && e.name.endsWith(".parquet"))
-              .foreach(e => st.copyFile(e.path, st.child(dst, e.name)))
-          }
-        }
+        copyParts(path, dvVisible(path, version)._2.map(dvDir(path, _)),
+          dvDir(path, nv))
         atomicWrite(dvBaseFile(path, nv), "")
         publishFull(path, nv, manifest(path, version), None)
         nv
@@ -460,30 +452,9 @@ object SnapshotStore {
     * version with NO sidecar degrades to a full read + filter, never a
     * wrong answer. */
   def readWhere(spark: SparkSession, path: String, key: String,
-                lo: Long, hi: Long, version: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val v = version.getOrElse(latestVersion(path))
-    require(v > 0, s"no committed snapshot under $path")
-    // DISTRIBUTED prune (r16): one Spark job joins the manifest scan
-    // to the stats checkpoint's rows for THIS column — primary or any
-    // extra (the compactZOrdered multi-dim case) — and collects only
-    // the surviving paths; the per-file stats never reach the driver.
-    // A sidecar over only other columns prunes nothing but still
-    // filters.
-    // logical → physical (stats ranges + data files use physical names)
-    val pk = physicalOf(path, v, key)
-    val kept = prunedFiles(spark, path, v, pk, lo, hi)
-    // the everything-pruned branch derives its (empty) frame from the
-    // SAME merged schema as the kept branch — a single-file sample
-    // could miss an evolved column (inconsistent schema for the same
-    // logical query) or even fail to resolve col(key).
-    val pruned =
-      if (kept.nonEmpty) readVersionFiles(spark, path, v, kept)
-      else readVersionFiles(spark, path, v, manifest(path, v)).limit(0)
-    presentDf(
-      maskDeleted(spark, path, v, pruned.filter(col(pk) >= lo && col(pk) <= hi)),
-      columnMapping(path, v))
-  }
+                lo: Long, hi: Long, version: Option[Long] = None): DataFrame =
+    readPruned(spark, path, key, version, outside(lo, hi))(
+      k => k >= lo && k <= hi)
 
   /** EQUALITY scan planning for string/partition columns (r18): rows
     * of the snapshot with `key` = `value`, reading only the files
@@ -497,17 +468,12 @@ object SnapshotStore {
     * residual equality filter stays in the scan. */
   def readWhereEq(spark: SparkSession, path: String, key: String,
                   value: String, version: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val v = version.getOrElse(latestVersion(path))
-    require(v > 0, s"no committed snapshot under $path")
-    val pk = physicalOf(path, v, key)
-    val kept = prunedFilesEq(spark, path, v, pk, value)
-    val pruned =
-      if (kept.nonEmpty) readVersionFiles(spark, path, v, kept)
-      else readVersionFiles(spark, path, v, manifest(path, v)).limit(0)
-    presentDf(
-      maskDeleted(spark, path, v, pruned.filter(col(pk) === value)),
-      columnMapping(path, v))
+    import org.apache.spark.sql.functions.{col, lit}
+    val missesStr = col("slo").isNotNull &&
+      (lit(value) < col("slo") || lit(value) > col("shi"))
+    val misses = scala.util.Try(value.toLong).toOption
+      .fold(missesStr)(n => missesStr || outside(n, n))
+    readPruned(spark, path, key, version, misses)(_ === value)
   }
 
   /** STRING-RANGE scan planning (r18): rows with `key` ∈ [lo, hi]
@@ -521,18 +487,34 @@ object SnapshotStore {
   def readWhereBetween(spark: SparkSession, path: String, key: String,
                        lo: String, hi: String,
                        version: Option[Long] = None): DataFrame = {
+    import org.apache.spark.sql.functions.{col, lit}
+    require(lo <= hi, s"readWhereBetween: lo '$lo' > hi '$hi'")
+    readPruned(spark, path, key, version, col("slo").isNotNull &&
+      (col("slo") > lit(hi) || col("shi") < lit(lo)))(
+      k => k >= lo && k <= hi)
+  }
+
+  /** The one body behind the pruned reads: pin the version, map the
+    * logical key to its physical name (stats ranges and data files use
+    * physical names), read the files [[statsPrune]] keeps under `excl`,
+    * then apply the residual row filter `rows` (over the physical key
+    * column), the version's masks and its column mapping. The
+    * everything-pruned branch derives its (empty) frame from the SAME
+    * merged schema as the kept branch — a single-file sample could
+    * miss an evolved column (inconsistent schema for the same logical
+    * query) or even fail to resolve the key. */
+  private def readPruned(spark: SparkSession, path: String, key: String,
+                         version: Option[Long], excl: Column)
+                        (rows: Column => Column): DataFrame = {
     import org.apache.spark.sql.functions.col
     val v = version.getOrElse(latestVersion(path))
     require(v > 0, s"no committed snapshot under $path")
-    require(lo <= hi, s"readWhereBetween: lo '$lo' > hi '$hi'")
     val pk = physicalOf(path, v, key)
-    val kept = prunedFilesStr(spark, path, v, pk, lo, hi)
+    val kept = prunedFiles(spark, path, v, pk, excl)
     val pruned =
       if (kept.nonEmpty) readVersionFiles(spark, path, v, kept)
       else readVersionFiles(spark, path, v, manifest(path, v)).limit(0)
-    presentDf(
-      maskDeleted(spark, path, v,
-        pruned.filter(col(pk) >= lo && col(pk) <= hi)),
+    presentDf(maskDeleted(spark, path, v, pruned.filter(rows(col(pk)))),
       columnMapping(path, v))
   }
 
@@ -875,7 +857,7 @@ object SnapshotStore {
             f.dataType == org.apache.spark.sql.types.StringType
         }.map(_.name).filterNot(declared.contains)
         val cols = (declared ++ auto).take(math.max(declared.size,
-          statsAutoColumns))
+          StatsAutoColumns))
         val meta = metaSession(df.sparkSession)
         import org.apache.spark.sql.functions.{input_file_name, min, max,
           explode, array, struct, lit, col, when, floor, ceil}
@@ -1038,20 +1020,13 @@ object SnapshotStore {
             case None => dropStatsCheckpoint(path, v)
           }
         }
-        // constant-size header sidecar: WHICH columns the version
-        // tracks (#key= primary, #cols= full list, #parts= partition
-        // columns, r18) — the metadata that lets maintenance commits
-        // keep recording the pruning layer and appends keep
+        // the header sidecar is the metadata that lets maintenance
+        // commits keep recording the pruning layer and appends keep
         // re-clustering
-        val headerParts: Seq[String] =
+        writeStatsHeader(path, v, cols,
           if (partitionCols.nonEmpty) partitionCols
           else if (isCarry) partsOf(path, prev)
-          else Nil
-        atomicWrite(statsFile(path, v),
-          s"#key=$key\n" +
-            (if (cols.size > 1) s"#cols=${cols.mkString(",")}\n" else "") +
-            (if (headerParts.nonEmpty)
-              s"#parts=${headerParts.mkString(",")}\n" else ""))
+          else Nil)
       case None =>
         // a crashed, rolled-back commit at this version may have left
         // stats artifacts behind; without a statsKey they would be
@@ -1063,9 +1038,7 @@ object SnapshotStore {
           // statsKeyOf/hasStats keep resolving — the fresh files
           // simply have no recorded ranges (unpruned, never wrong).
           // A Replace is a genuine reset.
-          val prevHdr = statsFile(path, prev)
-          if (st.exists(prevHdr))
-            atomicWrite(statsFile(path, v), st.readString(prevHdr))
+          carrySidecar(path, statsFile(path, prev), statsFile(path, v))
           // at a checkpoint commit, consolidate the chain's stats by
           // driver file-copy (chain frames are disjoint by
           // construction; stale rows are inert) so the new FULL base
@@ -1092,19 +1065,31 @@ object SnapshotStore {
     * the chain ends there and [[statsDF]] still unions them). */
   private def consolidateStatsByCopy(path: String, fromV: Long,
                                      atV: Long): Unit = {
-    val st = store(path)
     val (fullV, deltas) = chainOf(path, fromV)
-    val srcs = (fullV +: deltas.map(_._1)).map(statsCheckDir(path, _))
-      .filter(st.exists)
-    if (srcs.nonEmpty) {
-      val dst = statsCheckDir(path, atV)
+    copyParts(path, (fullV +: deltas.map(_._1)).map(statsCheckDir(path, _)),
+      statsCheckDir(path, atV))
+  }
+
+  /** Copy the parquet parts of every existing `srcs` dir other than
+    * `dst` into `dst` (driver IO, no Spark) — how stats checkpoints
+    * and deletion-vector sidecars consolidate across versions. */
+  private def copyParts(path: String, srcs: Seq[String], dst: String): Unit = {
+    val st = store(path)
+    val live = srcs.filter(st.exists)
+    if (live.nonEmpty) {
       st.mkdirs(dst)
-      srcs.filterNot(_ == dst).foreach { d =>
+      live.filterNot(_ == dst).foreach { d =>
         st.list(d)
           .filter(e => !e.isDir && e.name.endsWith(".parquet"))
           .foreach(e => st.copyFile(e.path, st.child(dst, e.name)))
       }
     }
+  }
+
+  /** Carry a version's sidecar file forward byte-for-byte, if present. */
+  private def carrySidecar(path: String, src: String, dst: String): Unit = {
+    val st = store(path)
+    if (st.exists(src)) atomicWrite(dst, st.readString(src))
   }
 
   private def statsFile(path: String, v: Long) =
@@ -1193,76 +1178,48 @@ object SnapshotStore {
         statsAllText(path, w).nonEmpty)
   }
 
-  /** FILE paths of the snapshot that may hold rows with `key` ∈
-    * [lo, hi] — the shared distributed prune: manifest scan
-    * left-joined to the checkpoint's rows for THIS column, keeping
-    * files whose range overlaps plus files with no recorded range
-    * (conservative). Only the SURVIVORS are collected (the minimum any
-    * engine needs to plan a scan); the full stats never reach the
-    * driver. With no stats at all, every file survives. */
-  private def prunedFiles(spark: SparkSession, path: String, v: Long,
-                          key: String, lo: Long, hi: Long): Seq[String] = {
+  /** THE stats prune — the only place SnapshotStore consults per-file
+    * stats. Left-joins the candidate `files` frame (one `file` column)
+    * to version `v`'s resolved stats rows for `key` and keeps every row
+    * `excl` does not exclude. `excl` is a predicate over the stats
+    * row's numeric (`lo`, `hi`) and lexicographic (`slo`, `shi`)
+    * ranges that holds only when a recorded range PROVES the file
+    * holds no matching row; a file with no range for the key is kept
+    * (conservative — degrade, never a wrong answer). The survivors
+    * stay a frame: the read and rewrite verbs collect their paths
+    * ([[prunedFiles]]), the rebase proof counts them
+    * ([[requireDisjointSince]]); the per-file stats never reach the
+    * driver. None when nothing in v's chain records stats — every
+    * candidate survives. */
+  private def statsPrune(spark: SparkSession, path: String, v: Long,
+                         key: String, excl: Column)
+                        (files: => DataFrame): Option[DataFrame] = {
     import org.apache.spark.sql.functions.col
-    val meta = metaSession(spark)
-    import meta.implicits._
-    statsDF(meta, path, v) match {
-      case None => manifest(path, v)
-      case Some(st) =>
-        manifestDF(meta, path, v)
-          .join(st.filter(col("column") === key), Seq("file"), "left")
-          .filter(col("lo").isNull ||
-            (col("hi") >= lo && col("lo") <= hi))
-          .select("file").distinct().as[String].collect().toSeq.sorted
+    statsDF(spark, path, v).map { st =>
+      files.join(st.filter(col("column") === key), Seq("file"), "left")
+        .filter(!excl || col("column").isNull)
     }
   }
 
-  /** FILE paths that may hold rows with `key` = `value` — the
-    * EQUALITY prune behind [[readWhereEq]] and the registered source's
-    * string-equality pushdown (r18). A file is skipped only when a
-    * recorded range PROVABLY excludes the value: the lexicographic
-    * (slo, shi) string range, or — when the value parses as a long —
-    * the numeric (lo, hi) range. No range (or no stats at all) keeps
-    * the file, never a wrong answer. Same distributed join as
-    * [[prunedFiles]]; only survivors reach the driver. */
-  private def prunedFilesEq(spark: SparkSession, path: String, v: Long,
-                            key: String, value: String): Seq[String] = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val meta = metaSession(spark)
-    import meta.implicits._
-    statsDF(meta, path, v) match {
-      case None => manifest(path, v)
-      case Some(st) =>
-        val vnum = scala.util.Try(value.toLong).toOption
-        val exclStr = col("slo").isNotNull &&
-          (lit(value) < col("slo") || lit(value) > col("shi"))
-        val exclNum = vnum.map(n => col("lo").isNotNull &&
-          (lit(n) < col("lo") || lit(n) > col("hi"))).getOrElse(lit(false))
-        manifestDF(meta, path, v)
-          .join(st.filter(col("column") === key), Seq("file"), "left")
-          .filter(!(exclStr || exclNum) || col("column").isNull)
-          .select("file").distinct().as[String].collect().toSeq.sorted
-    }
+  /** [[statsPrune]]'s exclusion for a numeric window: the file's
+    * recorded (lo, hi) range misses [lo, hi]. */
+  private def outside(lo: Long, hi: Long): Column = {
+    import org.apache.spark.sql.functions.col
+    col("lo").isNotNull && (col("hi") < lo || col("lo") > hi)
   }
 
-  /** FILE paths that may hold rows with `key` ∈ [lo, hi]
-    * lexicographically — [[readWhereBetween]]'s prune: a file is
-    * skipped only when its recorded string range provably misses the
-    * window. */
-  private def prunedFilesStr(spark: SparkSession, path: String, v: Long,
-                             key: String, lo: String, hi: String)
-      : Seq[String] = {
-    import org.apache.spark.sql.functions.{col, lit}
+  /** FILE paths of version `v` that may hold rows `excl` cannot rule
+    * out — [[statsPrune]] over the distributed manifest scan, with only
+    * the SURVIVORS collected (the minimum any engine needs to plan a
+    * scan or a rewrite). With no stats at all, every file survives. */
+  private def prunedFiles(spark: SparkSession, path: String, v: Long,
+                          key: String, excl: Column): Seq[String] = {
     val meta = metaSession(spark)
     import meta.implicits._
-    statsDF(meta, path, v) match {
+    statsPrune(meta, path, v, key, excl)(manifestDF(meta, path, v)) match {
       case None => manifest(path, v)
-      case Some(st) =>
-        val excl = col("slo").isNotNull &&
-          (col("slo") > lit(hi) || col("shi") < lit(lo))
-        manifestDF(meta, path, v)
-          .join(st.filter(col("column") === key), Seq("file"), "left")
-          .filter(!excl || col("column").isNull)
-          .select("file").distinct().as[String].collect().toSeq.sorted
+      case Some(kept) =>
+        kept.select("file").distinct().as[String].collect().toSeq.sorted
     }
   }
 
@@ -1502,9 +1459,8 @@ object SnapshotStore {
     * commit (heal drops the manifest + sidecar artifacts). */
   private def metadataCommit(path: String, v: Long,
                              mapping: Seq[(String, String)]): Long = {
-    val nv = v + 1
+    dropDvDir(path, v + 1) // stale crashed tombstones (commitLocked rule)
     val lst = store(path)
-    dropDvDir(path, nv) // stale crashed tombstones (commitLocked rule)
     val st = statsFile(path, v)
     if (lst.exists(st)) {
       // the stats header names PHYSICAL columns; a dropColumn must not
@@ -1523,19 +1479,23 @@ object SnapshotStore {
       val kept = (key.toSeq ++ cols).distinct.filter(live)
       // partition columns persist through rename/drop commits too —
       // minus any physical column the new mapping no longer presents
-      val keptParts = partsOf(path, v).filter(live)
-      kept.headOption.foreach { nk =>
-        atomicWrite(statsFile(path, nv),
-          s"#key=$nk\n" +
-            (if (kept.size > 1) s"#cols=${kept.mkString(",")}\n" else "") +
-            (if (keptParts.nonEmpty)
-              s"#parts=${keptParts.mkString(",")}\n" else ""))
-      }
+      if (kept.nonEmpty)
+        writeStatsHeader(path, v + 1, kept, partsOf(path, v).filter(live))
     }
-    writeColmap(path, nv, Some(mapping))
-    val sch = schemaFile(path, v)
-    if (lst.exists(sch))
-      atomicWrite(schemaFile(path, nv), lst.readString(sch))
+    publishSameFiles(path, v, Some(mapping))
+  }
+
+  /** The tail every metadata-only commit shares: version v+1 lists v's
+    * files unchanged, carries v's schema sidecar, and records
+    * `colmap`; it publishes as a zero-change DELTA manifest, or — at
+    * the checkpoint interval — consolidates the stats chain and
+    * publishes a FULL one. The caller has already written v+1's stats
+    * header and any mask sidecar. Returns v+1. */
+  private def publishSameFiles(path: String, v: Long,
+                               colmap: Option[Seq[(String, String)]]): Long = {
+    val nv = v + 1
+    writeColmap(path, nv, colmap)
+    carrySidecar(path, schemaFile(path, v), schemaFile(path, nv))
     val depth = manifestDepth(path, v) + 1
     if (depth < manifestCheckpointInterval)
       publishDelta(path, nv, adds = Nil, drops = Nil,
@@ -1546,6 +1506,16 @@ object SnapshotStore {
     }
     nv
   }
+
+  /** The constant-size stats header sidecar: WHICH physical columns a
+    * version tracks (`#key=` primary = `cols.head`, `#cols=` the full
+    * list, `#parts=` partition columns, r18). */
+  private def writeStatsHeader(path: String, v: Long, cols: Seq[String],
+                               parts: Seq[String]): Unit =
+    atomicWrite(statsFile(path, v),
+      s"#key=${cols.head}\n" +
+        (if (cols.size > 1) s"#cols=${cols.mkString(",")}\n" else "") +
+        (if (parts.nonEmpty) s"#parts=${parts.mkString(",")}\n" else ""))
 
   private def writeColmap(path: String, v: Long,
                           mapping: Option[Seq[(String, String)]]): Unit =
@@ -1571,24 +1541,16 @@ object SnapshotStore {
   private def dvBaseFile(path: String, v: Long) =
     store(path).child(snapDir(path), f"v$v%08d.dvbase")
 
-  /** Reset-marker versions ≤ v, ascending. */
-  private def dvBaseVersionsUpTo(path: String, v: Long): Seq[Long] =
-    store(path).list(snapDir(path))
-      .map(_.name).filter(_.matches("v\\d{8}\\.dvbase"))
-      .map(_.stripPrefix("v").stripSuffix(".dvbase").toLong)
-      .filter(_ <= v).sorted
-
-  /** Versions whose deletion-vector tombstones are VISIBLE at version
-    * `v`: sidecars in [newest reset marker ≤ v, v]. One directory
-    * listing serves both the markers and the sidecars. */
-  private def dvVersionsUpTo(path: String, v: Long): Seq[Long] = {
+  /** Deletion-vector visibility at version `v`, from ONE directory
+    * listing: the newest reset marker ≤ v (0 when none), and the
+    * versions whose tombstone sidecars are VISIBLE at v — those in
+    * [marker, v], ascending. */
+  private def dvVisible(path: String, v: Long): (Long, Seq[Long]) = {
     val names = store(path).list(snapDir(path)).map(_.name)
-    val base = names.filter(_.matches("v\\d{8}\\.dvbase"))
-      .map(_.stripPrefix("v").stripSuffix(".dvbase").toLong)
-      .filter(_ <= v).sorted.lastOption.getOrElse(0L)
-    names.filter(_.matches("v\\d{8}\\.dvpq"))
-      .map(_.stripPrefix("v").stripSuffix(".dvpq").toLong)
-      .filter(w => w <= v && w >= base).sorted
+    def numbered(ext: String) =
+      names.filter(_.matches(s"v\\d{8}\\.$ext")).map(_.substring(1, 9).toLong)
+    val base = numbered("dvbase").filter(_ <= v).foldLeft(0L)(math.max)
+    (base, numbered("dvpq").filter(w => w <= v && w >= base).sorted)
   }
 
   /** All tombstones visible at version `v`: (file, row_index) rows,
@@ -1597,7 +1559,7 @@ object SnapshotStore {
     * anti-join against rows actually read from live files. */
   private def dvFrame(spark: SparkSession, path: String, v: Long)
       : Option[DataFrame] = {
-    val dirs = dvVersionsUpTo(path, v).map(dvDir(path, _))
+    val dirs = dvVisible(path, v)._2.map(dvDir(path, _))
       .filter(store(path).exists)
     if (dirs.isEmpty) None
     else Some(spark.read.parquet(dirs: _*))
@@ -1611,17 +1573,26 @@ object SnapshotStore {
     * anti-join broadcasts. */
   private def maskDeleted(spark: SparkSession, path: String, v: Long,
                           df: DataFrame): DataFrame =
-    dvFrame(spark, path, v) match {
-      case None => df
-      case Some(dv) =>
-        import org.apache.spark.sql.functions.col
-        df.withColumn("_dv_file", col("_metadata.file_path"))
-          .withColumn("_dv_row", col("_metadata.row_index"))
-          .join(dv.select(col("file").as("_dv_file"),
-            col("row_index").as("_dv_row")),
-            Seq("_dv_file", "_dv_row"), "left_anti")
-          .drop("_dv_file", "_dv_row")
-    }
+    dvFrame(spark, path, v).fold(df)(joinMask(df, _, "left_anti"))
+
+  /** Join a frame scanned from this table's files to tombstone rows on
+    * the hidden (_metadata.file_path, _metadata.row_index) identity:
+    * `left_anti` drops the masked rows, `left_semi` keeps only them. */
+  private def joinMask(df: DataFrame, mask: DataFrame, how: String): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    df.withColumn("_dv_file", col("_metadata.file_path"))
+      .withColumn("_dv_row", col("_metadata.row_index"))
+      .join(mask.select(col("file").as("_dv_file"),
+        col("row_index").as("_dv_row")),
+        Seq("_dv_file", "_dv_row"), how)
+      .drop("_dv_file", "_dv_row")
+  }
+
+  /** Tombstone rows minus those already in `masks` (the same
+    * (file, row_index) identity, on the tombstone frames themselves). */
+  private def minusMasks(rows: DataFrame, masks: Option[DataFrame]): DataFrame =
+    masks.fold(rows)(m =>
+      rows.join(m.select("file", "row_index"), Seq("file", "row_index"), "left_anti"))
 
   /** Row-level DELETE as a DELETION-VECTOR commit (r17) — the
     * Delta/Iceberg answer to "a 1-row GDPR takedown in a 1 GB file
@@ -1649,7 +1620,7 @@ object SnapshotStore {
       val ks = toPhysicalDf(path, v, keys).select(col(pk)).distinct()
       val (bLo, bHi) =
         batchBounds(ks, pk, s"deleteVectorCommit: empty key set for $path")
-      val touched = prunedFiles(spark, path, v, pk, bLo, bHi)
+      val touched = prunedFiles(spark, path, v, pk, outside(bLo, bHi))
       if (touched.isEmpty) v
       else {
         // positions of matching LIVE rows; rows already masked are
@@ -1659,77 +1630,33 @@ object SnapshotStore {
         // manifest form (what CDC compares against manifest diffs).
         // `_metadata` must be projected BEFORE any join (it is a
         // hidden per-relation column), so the already-masked anti-join
-        // is inlined here rather than via maskDeleted.
+        // runs on the projected columns rather than via maskDeleted.
         import spark.implicits._
         val scanned = readVersionFiles(spark, path, v, touched)
           .select(col(pk),
             col("_metadata.file_path").as("file"),
             col("_metadata.row_index").as("row_index"))
-        val liveRows = dvFrame(spark, path, v) match {
-          case None => scanned
-          case Some(dv) => scanned.join(dv.select("file", "row_index"),
-            Seq("file", "row_index"), "left_anti")
-        }
         // r18: persisted — the empty-set probe and the sidecar write
         // otherwise each re-run the table scan + mask + key semi-join
-        val positions = liveRows
+        val positions = minusMasks(scanned, dvFrame(spark, path, v))
           .join(ks, Seq(pk), "left_semi")
           .select("file", "row_index").as[(String, Long)]
-          .map { case (f, r) =>
-            val np = try normalizePath(f)
-                     catch { case _: Exception =>
-                       f.replaceFirst("^file:(//)?", "") }
-            (f, np, r)
-          }.toDF("file", "path", "row_index").persist()
+          .map { case (f, r) => (f, normalizePathSafe(f), r) }
+          .toDF("file", "path", "row_index").persist()
         try {
-        if (positions.isEmpty) v // keys absent or already masked
-        else {
-          val nv = v + 1
-          val lst = store(path)
-          positions.coalesce(1).write.mode(SaveMode.Overwrite)
-            .parquet(dvDir(path, nv))
-          // carry the stats header + column mapping like any other
-          // carry commit — the table's tracking must survive
-          val prevHdr = statsFile(path, v)
-          if (lst.exists(prevHdr))
-            atomicWrite(statsFile(path, nv), lst.readString(prevHdr))
-          val sch = schemaFile(path, v)
-          if (lst.exists(sch))
-            atomicWrite(schemaFile(path, nv), lst.readString(sch))
-          writeColmap(path, nv, columnMapping(path, v))
-          val depth = manifestDepth(path, v) + 1
-          if (depth < manifestCheckpointInterval)
-            publishDelta(path, nv, adds = Nil, drops = Nil,
-              n = nFiles(path, v), depth = depth, batchId = None)
+          if (positions.isEmpty) v // keys absent or already masked
           else {
-            consolidateStatsByCopy(path, v, nv)
-            publishFull(path, nv, manifest(path, v), None)
+            positions.coalesce(1).write.mode(SaveMode.Overwrite)
+              .parquet(dvDir(path, v + 1))
+            // carry the stats header + column mapping like any other
+            // carry commit — the table's tracking must survive
+            carrySidecar(path, statsFile(path, v), statsFile(path, v + 1))
+            publishSameFiles(path, v, columnMapping(path, v))
           }
-          nv
-        }
         } finally positions.unpersist(false)
       }
     }
 
-  /** Changelog (CDC) read: the row-level DELTA between two committed
-    * versions, read in O(changed files) — never O(table). Data files
-    * are immutable, so the manifest SET DIFFERENCE is exact file-level
-    * change pruning: files carried between the versions cannot hold
-    * changed rows and are never opened (the same sidecar discipline
-    * that makes [[mergeCommit]] O(touched data) makes this read
-    * O(touched data) — a point-key merge at 100 TB yields a CDC read
-    * of one removed + one added file).
-    *
-    * Keyless: every row of an added file is an `insert`, every row of
-    * a removed file a `delete` — exact for any table, but a compaction
-    * (same rows, new files) shows up as delete+insert pairs.
-    * With `key` (the [[mergeCommit]] key-unique contract): removed and
-    * added rows are full-outer-joined on the key and classified
-    * insert / update / delete, with payload-identical rewrites — a
-    * compaction, or a merge's carried survivors — SUPPRESSED, so a
-    * pure compaction produces an EMPTY changelog. Output: the table's
-    * columns (new-side payload for insert/update, old-side for
-    * delete) plus `_change`. */
   /** Rewrite `c` (of type `dt`) into a form whose to_json serialization
     * is canonical: every MapType at ANY nesting depth becomes its entry
     * array sorted by key (sort_array over array<struct<key,value>>
@@ -1765,43 +1692,36 @@ object SnapshotStore {
     if (hasMap(dt)) go(c, dt) else c
   }
 
+  /** Changelog (CDC) read: the row-level DELTA between two committed
+    * versions, read in O(changed files) — never O(table). Data files
+    * are immutable, so the manifest SET DIFFERENCE is exact file-level
+    * change pruning: files carried between the versions cannot hold
+    * changed rows and are never opened (the same sidecar discipline
+    * that makes [[mergeCommit]] O(touched data) makes this read
+    * O(touched data) — a point-key merge at 100 TB yields a CDC read
+    * of one removed + one added file).
+    *
+    * Keyless: every row of an added file is an `insert`, every row of
+    * a removed file a `delete` — exact for any table, but a compaction
+    * (same rows, new files) shows up as delete+insert pairs.
+    * With `key` (the [[mergeCommit]] key-unique contract): removed and
+    * added rows are full-outer-joined on the key and classified
+    * insert / update / delete, with payload-identical rewrites — a
+    * compaction, or a merge's carried survivors — SUPPRESSED, so a
+    * pure compaction produces an EMPTY changelog. Output: the table's
+    * columns (new-side payload for insert/update, old-side for
+    * delete) plus `_change`. */
   def readChanges(spark: SparkSession, path: String, fromV: Long, toV: Long,
                   key: Option[String] = None): DataFrame = {
     import org.apache.spark.sql.functions._
     require(fromV >= 1 && toV >= fromV,
       s"readChanges: need 1 <= fromV <= toV, got $fromV..$toV")
-    // O(delta) fast path (r17): when toV's manifest chain passes
-    // through fromV, the net added/removed sets are the chain's delta
-    // lines — a streaming micro-batch or stepped consumer plans its
-    // CDC read without materializing either endpoint's file list. A
-    // FULL checkpoint inside the range falls back to the exact
-    // endpoint set-difference.
-    val (added, removed) = changedFiles(path, fromV, toV) match {
-      case Some((a, r)) => (a.sorted, r.sorted)
-      case None =>
-        val before = manifest(path, fromV)
-        val after = manifest(path, toV)
-        (after.filterNot(before.toSet).sorted,
-          before.filterNot(after.toSet).sorted)
-    }
-    // schema anchor for an empty side — only materialized on the
-    // no-change edge (pure metadata commit / identical manifests)
-    lazy val anyFile: String =
-      manifest(path, toV).headOption.getOrElse(manifest(path, fromV).head)
-    // mergeSchema on BOTH sides: a CDC range spanning several commits
-    // reads schema-heterogeneous file sets, and one-footer inference
-    // would nondeterministically drop an evolved column from the delta
-    // (and from `common`, flipping update/suppressed classification).
+    val (added, removed) = fileDiff(path, fromV, toV)
     // Deletion-vector masks are VERSIONED (r17): the removed side masks
     // at fromV (rows already dead then were reported in an earlier
     // delta), the added side at toV (rows added-then-masked inside the
     // range were never visible at either endpoint).
-    def readFiles(fs: Seq[String], maskV: Long): DataFrame =
-      if (fs.nonEmpty)
-        maskDeleted(spark, path, maskV,
-          readVersionFiles(spark, path, maskV, fs))
-      else readVersionFiles(spark, path, toV, Seq(anyFile)).limit(0)
-    val ins = readFiles(added, toV)
+    val ins = readDiffSide(spark, path, fromV, toV, added, toV)
     // rows TOMBSTONED inside the range in files still carried at toV:
     // deletes with no file-level change (a deleteVectorCommit's whole
     // delta). Files the range itself added/removed are handled by the
@@ -1812,61 +1732,33 @@ object SnapshotStore {
     // restore's consolidated copy) — anti-join them away; and masks
     // active at fromV but gone at toV (rolled back by the restore)
     // RESURRECT their rows as inserts.
-    val resetInRange =
-      dvBaseVersionsUpTo(path, toV).exists(r => r > fromV)
-    val dvNewDirs = dvVersionsUpTo(path, toV).filter(_ > fromV)
+    val (base, dvs) = dvVisible(path, toV)
+    val resetInRange = base > fromV
+    // the rows of `masks` in files CARRIED through the range, read from
+    // toV's files
+    def carriedRows(masks: DataFrame): Option[DataFrame] = {
+      import spark.implicits._
+      val carried = masks.select("path").distinct().as[String].collect()
+        .toSeq.filterNot(added.toSet).filterNot(removed.toSet).sorted
+      if (carried.isEmpty) None
+      else Some(joinMask(readVersionFiles(spark, path, toV, carried),
+        masks, "left_semi"))
+    }
+    val dvNewDirs = dvs.filter(_ > fromV)
       .map(dvDir(path, _)).filter(store(path).exists)
     val dvDel: Option[DataFrame] =
       if (dvNewDirs.isEmpty) None
-      else {
-        import spark.implicits._
-        val dvNew0 = spark.read.parquet(dvNewDirs: _*)
-        val dvNew =
-          if (!resetInRange) dvNew0
-          else dvFrame(spark, path, fromV) match {
-            case Some(old) => dvNew0.join(
-              old.select("file", "row_index"),
-              Seq("file", "row_index"), "left_anti")
-            case None => dvNew0
-          }
-        val carried = dvNew.select("path").distinct().as[String].collect()
-          .toSeq.filterNot(added.toSet).filterNot(removed.toSet).sorted
-        if (carried.isEmpty) None
-        else Some(
-          readVersionFiles(spark, path, toV, carried)
-            .withColumn("_dv_file", col("_metadata.file_path"))
-            .withColumn("_dv_row", col("_metadata.row_index"))
-            .join(dvNew.select(col("file").as("_dv_file"),
-              col("row_index").as("_dv_row")),
-              Seq("_dv_file", "_dv_row"), "left_semi")
-            .drop("_dv_file", "_dv_row"))
-      }
+      else carriedRows(minusMasks(spark.read.parquet(dvNewDirs: _*),
+        if (resetInRange) dvFrame(spark, path, fromV) else None))
     // resurrection arm: only a restore can UNMASK rows in place (files
     // the range itself added/removed ride the file diff)
     val dvRes: Option[DataFrame] =
       if (!resetInRange) None
-      else dvFrame(spark, path, fromV).flatMap { old =>
-        import spark.implicits._
-        val gone = dvFrame(spark, path, toV) match {
-          case Some(nw) => old.join(nw.select("file", "row_index"),
-            Seq("file", "row_index"), "left_anti")
-          case None => old
-        }
-        val carried = gone.select("path").distinct().as[String].collect()
-          .toSeq.filterNot(added.toSet).filterNot(removed.toSet).sorted
-        if (carried.isEmpty) None
-        else Some(
-          readVersionFiles(spark, path, toV, carried)
-            .withColumn("_dv_file", col("_metadata.file_path"))
-            .withColumn("_dv_row", col("_metadata.row_index"))
-            .join(gone.select(col("file").as("_dv_file"),
-              col("row_index").as("_dv_row")),
-              Seq("_dv_file", "_dv_row"), "left_semi")
-            .drop("_dv_file", "_dv_row"))
-      }
+      else dvFrame(spark, path, fromV).flatMap(old =>
+        carriedRows(minusMasks(old, dvFrame(spark, path, toV))))
     val ins1 = dvRes.foldLeft(ins)(
       _.unionByName(_, allowMissingColumns = true))
-    val del = dvDel.foldLeft(readFiles(removed, fromV))(
+    val del = dvDel.foldLeft(readDiffSide(spark, path, fromV, toV, removed, fromV))(
       _.unionByName(_, allowMissingColumns = true))
     require(!ins1.columns.contains("_change") &&
       !del.columns.contains("_change"),
@@ -1945,15 +1837,20 @@ object SnapshotStore {
   def readChangesVersioned(spark: SparkSession, path: String,
                            fromV: Long, toV: Long,
                            key: Option[String] = None): DataFrame = {
-    import org.apache.spark.sql.functions.lit
     require(fromV >= 1 && toV > fromV,
       s"readChangesVersioned: need 1 <= fromV < toV, got $fromV..$toV")
     ((fromV + 1) to toV).map { w =>
-      readChanges(spark, path, w - 1, w, key)
-        .withColumn("_commit_version", lit(w))
-        .withColumn("_commit_timestamp",
-          lit(new java.sql.Timestamp(commitTime(path, w))))
+      stampCommit(path)(readChanges(spark, path, w - 1, w, key), w)
     }.reduce(_.unionByName(_, allowMissingColumns = true))
+  }
+
+  /** Delta CDF's `_commit_version` / `_commit_timestamp` columns for
+    * rows that version `w` produced. */
+  private def stampCommit(path: String)(df: DataFrame, w: Long): DataFrame = {
+    import org.apache.spark.sql.functions.lit
+    df.withColumn("_commit_version", lit(w))
+      .withColumn("_commit_timestamp",
+        lit(new java.sql.Timestamp(commitTime(path, w))))
   }
 
   /** [[changeFeed]] with version attribution: the bootstrap (when the
@@ -1961,30 +1858,9 @@ object SnapshotStore {
     * is [[readChangesVersioned]]. */
   def changeFeedVersioned(spark: SparkSession, path: String,
                           fromV: Long, toV: Long,
-                          key: Option[String] = None): DataFrame = {
-    import org.apache.spark.sql.functions.lit
-    val baseline = fromV - 1
-    val retained = versions(path)
-    require(retained.nonEmpty && toV >= 1,
-      s"changeFeed: no committed snapshot under $path")
-    val oldest = retained.min
-    require(toV >= oldest,
-      s"changeFeed: endingVersion $toV predates retention " +
-        s"(oldest retained version is $oldest)")
-    if (baseline >= oldest) readChangesVersioned(spark, path, baseline, toV, key)
-    else {
-      val anchor = math.min(math.max(oldest, 1L), toV)
-      val boot = read(spark, path, Some(anchor))
-        .withColumn("_change", lit("insert"))
-        .withColumn("_commit_version", lit(anchor))
-        .withColumn("_commit_timestamp",
-          lit(new java.sql.Timestamp(commitTime(path, anchor))))
-      if (toV <= anchor) boot
-      else boot.unionByName(
-        readChangesVersioned(spark, path, anchor, toV, key),
-        allowMissingColumns = true)
-    }
-  }
+                          key: Option[String] = None): DataFrame =
+    feed(spark, path, fromV, toV, stampCommit(path))(
+      readChangesVersioned(spark, path, _, _, key))
 
   /** The CHANGE FEED for the inclusive version range [fromV, toV] —
     * the shared semantics behind the registered source's
@@ -1995,7 +1871,17 @@ object SnapshotStore {
     * retained version's rows as inserts, unioned with the changes from
     * that anchor forward. */
   def changeFeed(spark: SparkSession, path: String, fromV: Long, toV: Long,
-                 key: Option[String] = None): DataFrame = {
+                 key: Option[String] = None): DataFrame =
+    feed(spark, path, fromV, toV, (df, _) => df)(
+      readChanges(spark, path, _, _, key))
+
+  /** The one body behind [[changeFeed]] and [[changeFeedVersioned]]:
+    * `diff(baseline, toV)` when the baseline fromV − 1 is retained,
+    * else the anchor version's rows as inserts (passed through `stamp`
+    * with the anchor) unioned with `diff(anchor, toV)`. */
+  private def feed(spark: SparkSession, path: String, fromV: Long, toV: Long,
+                   stamp: (DataFrame, Long) => DataFrame)
+                  (diff: (Long, Long) => DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.lit
     val baseline = fromV - 1
     val retained = versions(path)
@@ -2005,14 +1891,13 @@ object SnapshotStore {
     require(toV >= oldest,
       s"changeFeed: endingVersion $toV predates retention " +
         s"(oldest retained version is $oldest)")
-    if (baseline >= oldest) readChanges(spark, path, baseline, toV, key)
+    if (baseline >= oldest) diff(baseline, toV)
     else {
       val anchor = math.min(math.max(oldest, 1L), toV)
-      val boot = read(spark, path, Some(anchor))
-        .withColumn("_change", lit("insert"))
+      val boot = stamp(read(spark, path, Some(anchor))
+        .withColumn("_change", lit("insert")), anchor)
       if (toV <= anchor) boot
-      else boot.unionByName(readChanges(spark, path, anchor, toV, key),
-        allowMissingColumns = true)
+      else boot.unionByName(diff(anchor, toV), allowMissingColumns = true)
     }
   }
 
@@ -2029,30 +1914,49 @@ object SnapshotStore {
                   ignoreChanges: Boolean = false): DataFrame = {
     require(fromV >= 1 && toV >= fromV,
       s"readAppends: need 1 <= fromV <= toV, got $fromV..$toV")
-    // same O(delta) fast path as readChanges (r17)
-    val (added, removed) = changedFiles(path, fromV, toV) match {
-      case Some((a, r)) => (a.sorted, r)
-      case None =>
-        val before = manifest(path, fromV)
-        val after = manifest(path, toV)
-        (after.filterNot(before.toSet).sorted,
-          before.filterNot(after.toSet))
-    }
+    val (added, removed) = fileDiff(path, fromV, toV)
     if (!ignoreChanges)
       require(removed.isEmpty,
         s"readAppends: $path v$fromV..v$toV removed ${removed.size} " +
           "file(s) (update/delete/compaction) - the appended-rows " +
           "stream would duplicate rewritten rows; use readChangeFeed " +
           "for exact deltas, or ignoreChanges to accept re-delivery")
-    val df =
-      if (added.nonEmpty)
-        maskDeleted(spark, path, toV,
-          readVersionFiles(spark, path, toV, added))
-      else readVersionFiles(spark, path, toV,
-        Seq(manifest(path, toV).headOption
-          .getOrElse(manifest(path, fromV).head))).limit(0)
-    presentDf(df, columnMapping(path, toV))
+    presentDf(readDiffSide(spark, path, fromV, toV, added, toV),
+      columnMapping(path, toV))
   }
+
+  /** Net (added, removed) files of the range (fromV, toV], sorted. The
+    * O(delta) fast path (r17): when toV's manifest chain passes through
+    * fromV, the sets are the chain's delta lines — a streaming
+    * micro-batch or stepped consumer plans its read without
+    * materializing either endpoint's file list. A FULL checkpoint
+    * inside the range falls back to the exact endpoint
+    * set-difference. */
+  private def fileDiff(path: String, fromV: Long, toV: Long)
+      : (Seq[String], Seq[String]) =
+    changedFiles(path, fromV, toV) match {
+      case Some((a, r)) => (a.sorted, r.sorted)
+      case None =>
+        val before = manifest(path, fromV)
+        val after = manifest(path, toV)
+        (after.filterNot(before.toSet).sorted,
+          before.filterNot(after.toSet).sorted)
+    }
+
+  /** One side of a change read: `files` under version `maskV`'s schema
+    * sidecar and masks. The sidecar schema matters — a range spanning
+    * several commits reads schema-heterogeneous files, and one-footer
+    * inference would nondeterministically drop an evolved column. An
+    * empty side is an empty frame under toV's schema, anchored on any
+    * file (resolved only on that no-change edge: a pure metadata
+    * commit or identical manifests). */
+  private def readDiffSide(spark: SparkSession, path: String, fromV: Long,
+                           toV: Long, files: Seq[String], maskV: Long): DataFrame =
+    if (files.nonEmpty)
+      maskDeleted(spark, path, maskV, readVersionFiles(spark, path, maskV, files))
+    else readVersionFiles(spark, path, toV,
+      Seq(manifest(path, toV).headOption
+        .getOrElse(manifest(path, fromV).head))).limit(0)
 
   // ——— incremental consumers: checkpointed changelog reads ———
 
@@ -2180,11 +2084,7 @@ object SnapshotStore {
     import org.apache.spark.sql.functions.col
     val v = latestVersion(path)
     require(v > 0, s"no committed snapshot under $path")
-    val bounds = df.agg(
-      org.apache.spark.sql.functions.min(key).cast("long"),
-      org.apache.spark.sql.functions.max(key).cast("long")).head()
-    require(!bounds.isNullAt(0), s"mergeCommit: empty batch for $path")
-    val (bLo, bHi) = (bounds.getLong(0), bounds.getLong(1))
+    val (bLo, bHi) = batchBounds(df, key, s"mergeCommit: empty batch for $path")
     // distributed per-KEY prune (shared with readWhere): the sidecar's
     // primary column may differ from the merge key — pruning with the
     // wrong column's ranges would classify files as untouched whose
@@ -2193,7 +2093,7 @@ object SnapshotStore {
     // only the touched paths (small by construction for a point-key
     // batch) are collected — the untouched set is never materialized
     // (the commit is a manifest DELTA, r17).
-    val touched = prunedFiles(spark, path, v, key, bLo, bHi)
+    val touched = prunedFiles(spark, path, v, key, outside(bLo, bHi))
     // mergeSchema: touched files may span commits with different
     // schemas (appends add columns); plain parquet inference samples
     // ONE footer and could drop an evolved column from the rewrite.
@@ -2269,7 +2169,7 @@ object SnapshotStore {
           "row matching several source rows is nondeterministic")
       val (bLo, bHi) =
         batchBounds(source, key, s"mergeInto: empty source for $path")
-      val touched = prunedFiles(spark, path, v, pk, bLo, bHi)
+      val touched = prunedFiles(spark, path, v, pk, outside(bLo, bHi))
       val mapping = columnMapping(path, v)
       // all clause expressions run over LOGICAL names; the commit
       // translates back at the end
@@ -2414,22 +2314,14 @@ object SnapshotStore {
   private def requireDisjointSince(spark: SparkSession, path: String,
                                    fromV: Long, toV: Long, key: String,
                                    bounds: (Long, Long)): Unit = {
-    import org.apache.spark.sql.functions.col
     import spark.implicits._
     require(fromV >= 1 && fromV < toV,
       s"snapshot commit: $path at v$toV, prepared against v$fromV")
     val (bLo, bHi) = bounds
     def conflicts(files: Seq[String], statsV: Long): Long =
       if (files.isEmpty) 0L
-      else statsDF(spark, path, statsV) match {
-        case None => files.size.toLong // no stats → unprovable
-        case Some(st) =>
-          files.toDF("file")
-            .join(st.filter(col("column") === key), Seq("file"), "left")
-            .filter(col("lo").isNull ||
-              (col("hi") >= bLo && col("lo") <= bHi))
-            .count()
-      }
+      else statsPrune(spark, path, statsV, key, outside(bLo, bHi))(
+        files.toDF("file")).fold(files.size.toLong)(_.count()) // no stats → unprovable
     ((fromV + 1) to toV).foreach { w =>
       // a vacuumed intervening version makes disjointness UNPROVABLE,
       // not an internal error: surface it as the retryable conflict
@@ -2460,16 +2352,13 @@ object SnapshotStore {
     val v = latestVersion(path)
     require(v > 0, s"no committed snapshot under $path")
     val ks = keys.select(col(key)).distinct()
-    val bounds = ks.agg(
-      org.apache.spark.sql.functions.min(key).cast("long"),
-      org.apache.spark.sql.functions.max(key).cast("long")).head()
-    require(!bounds.isNullAt(0), s"deleteCommit: empty key set for $path")
-    val (bLo, bHi) = (bounds.getLong(0), bounds.getLong(1))
+    val (bLo, bHi) =
+      batchBounds(ks, key, s"deleteCommit: empty key set for $path")
     // distributed per-KEY prune (not the sidecar's primary column) — a
     // takedown by `id` on a table stats-tracked on `ts` must not skip
     // files whose ts-range happens to be disjoint from the id-bounds;
     // files with no range for THIS key degrade to "touched".
-    val touched = prunedFiles(spark, path, v, key, bLo, bHi)
+    val touched = prunedFiles(spark, path, v, key, outside(bLo, bHi))
     if (touched.isEmpty) v // every file disjoint from the key range
     else {
       // mergeSchema for the same reason as mergeCommit: touched files
@@ -2731,12 +2620,15 @@ object SnapshotStore {
   private def publishFull(path: String, v: Long, files: Seq[String],
                           batchId: Option[Long]): Unit = {
     store(path).mkdirs(snapDir(path))
-    atomicWrite(manifestFile(path, v),
-      s"#ts=${System.currentTimeMillis()}\n#n=${files.size}\n" +
-        files.mkString("\n") + "\n")
+    writeFullManifest(path, v, System.currentTimeMillis(), files)
     batchId.foreach(b => atomicWrite(batchFile(path, v), b.toString))
     publishPointer(path, v)
   }
+
+  private def writeFullManifest(path: String, v: Long, ts: Long,
+                                files: Seq[String]): Unit =
+    atomicWrite(manifestFile(path, v),
+      s"#ts=$ts\n#n=${files.size}\n" + files.mkString("\n") + "\n")
 
   /** DELTA publication (r17): the manifest records only what changed —
     * the O(delta) commit path. Same crash discipline as a FULL
@@ -2940,7 +2832,7 @@ object SnapshotStore {
       import spark.implicits._
       val st = store(path)
       val live = (keepFrom to v).flatMap(manifest(path, _)).distinct
-      dvVersionsUpTo(path, v).foreach { w =>
+      dvVisible(path, v)._2.foreach { w =>
         val d = dvDir(path, w)
         if (st.exists(d)) {
           val rows = spark.read.parquet(d)
@@ -2986,10 +2878,8 @@ object SnapshotStore {
     // timestamp — every later retained delta's chain now stops there.
     if (keepFrom > 1 && manifestDepth(path, keepFrom) > 0) {
       consolidateStatsByCopy(path, keepFrom, keepFrom)
-      val full = manifest(path, keepFrom)
-      atomicWrite(manifestFile(path, keepFrom),
-        s"#ts=${commitTime(path, keepFrom)}\n#n=${full.size}\n" +
-          full.mkString("\n") + "\n")
+      writeFullManifest(path, keepFrom, commitTime(path, keepFrom),
+        manifest(path, keepFrom))
     }
     // deletion vectors from expiring versions still mask rows in
     // retained files — consolidate their parts into the boundary
@@ -3002,20 +2892,9 @@ object SnapshotStore {
     // are dead there and must not resurrect via consolidation; an
     // expiring marker migrates to keepFrom so the visibility cut
     // survives retention.
-    val baseAtKeep = dvBaseVersionsUpTo(path, keepFrom)
-      .lastOption.getOrElse(0L)
-    val oldDv = dvVersionsUpTo(path, keepFrom - 1)
-      .filter(_ >= baseAtKeep)
-      .map(dvDir(path, _)).filter(st.exists)
-    if (oldDv.nonEmpty) {
-      val dst = dvDir(path, keepFrom)
-      st.mkdirs(dst)
-      oldDv.filterNot(_ == dst).foreach { d =>
-        st.list(d)
-          .filter(e => !e.isDir && e.name.endsWith(".parquet"))
-          .foreach(e => st.copyFile(e.path, st.child(dst, e.name)))
-      }
-    }
+    val (baseAtKeep, visibleAtKeep) = dvVisible(path, keepFrom)
+    copyParts(path, visibleAtKeep.filter(_ < keepFrom).map(dvDir(path, _)),
+      dvDir(path, keepFrom))
     if (baseAtKeep > 0 && baseAtKeep < keepFrom)
       atomicWrite(dvBaseFile(path, keepFrom), "")
     val live: Set[String] =

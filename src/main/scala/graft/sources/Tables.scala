@@ -35,10 +35,11 @@ final case class Tables(spark: SparkSession, dir: String) {
     * or native TIMESTAMP(MICROS), which reads as TIMESTAMP_NTZ and only
     * needs the cast to the engine's session-TZ timestamp (identity on
     * the wall clock — GraftSession pins UTC). Branching on the read
-    * dtype keeps both layouts oracle-comparable. */
+    * dtype keeps both layouts oracle-comparable. A TIMESTAMP(NANOS)
+    * layout needs a session built through `GraftSession.tune`, which
+    * sets `spark.sql.legacy.parquet.nanosAsLong`; this loader never
+    * changes its caller's session conf. */
   def events: DataFrame = {
-    // defensive: a caller-provided session (driver smoke) may lack the conf
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = t("events")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
@@ -72,8 +73,8 @@ final case class Tables(spark: SparkSession, dir: String) {
   * qualified path, on its leaf files as (relative name, length,
   * modification time) — so a rewrite in place, a `TableWriter.compact`
   * directory swap or an added file misses — and on every session conf
-  * schema inference reads ([[InferenceConfs]] prefixes; `events` sets
-  * `nanosAsLong` before it opens, so that setting is part of its key).
+  * schema inference reads ([[InferenceConfs]] prefixes, `nanosAsLong`
+  * among them).
   * Building the key is one driver-side listing and no job. The memo
   * holds only schemas, never a session, and keeps the [[MaxSchemas]]
   * most recently used. */

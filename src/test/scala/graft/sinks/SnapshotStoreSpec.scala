@@ -25,6 +25,12 @@ class SnapshotStoreSpec extends SparkSpec {
         "the undeclared column's stats must file-prune")
     assert(narrow.select("id").as[Long].collect().toSet ==
       (10L to 30L).toSet)
+    // numeric EQUALITY through the same prune: the value parses, so the
+    // files' disjoint numeric (lo, hi) ranges of v exclude all but one
+    val eqV = SnapshotStore.readWhereEq(spark, path, "v", "33")
+    assert(eqV.select("id").as[Long].collect().toSeq == Seq(11L))
+    assert(eqV.inputFiles.length == 1,
+      s"${eqV.inputFiles.length} of ${full.inputFiles.length}")
 
     // conservative cast rules: a fractional column widens (floor/ceil)
     // and an overflowing value poisons its file's range — the file
@@ -345,6 +351,21 @@ class SnapshotStoreSpec extends SparkSpec {
       statsKey = Some("k"))
     assert(SnapshotStore.readWhere(spark, path2, "k", 5, 5)
       .count() == 1, "numeric-string range must not mis-prune")
+
+    // the lexicographic window prune keeps a file with NO recorded
+    // string range (v1 is untracked) and skips one whose range misses
+    val path3 = freshTable()
+    SnapshotStore.commit(Seq(("a", 1L)).toDF("k", "x").coalesce(1), path3)
+    val v1Files = SnapshotStore.read(spark, path3).inputFiles.toSet
+    SnapshotStore.commit(Seq(("c", 3L)).toDF("k", "x").coalesce(1), path3,
+      SaveMode.Append, statsKey = Some("x"))
+    val miss = SnapshotStore.readWhereBetween(spark, path3, "k", "m", "z")
+    assert(miss.count() == 0)
+    assert(miss.inputFiles.toSet == v1Files,
+      s"${miss.inputFiles.toSeq}: only the rangeless v1 file survives")
+    val both = SnapshotStore.readWhereBetween(spark, path3, "k", "a", "c")
+    assert(both.select("k").as[String].collect().toSet == Set("a", "c"))
+    assert(both.inputFiles.length == 2)
   }
 
   test("compactHilbert: 2-D clustering commit — both dims prune, boxes at least as tight as z-order") {
@@ -1008,6 +1029,26 @@ class SnapshotStoreSpec extends SparkSpec {
       SnapshotStore.mergeCommitIf(spark, p2,
         Seq((2L, -2L)).toDF("id", "v"), "id", s2)
     }
+
+    // on a stats-TRACKED table, an intervening file with no range for
+    // the key (its ids are all null, so only v is recorded) is just as
+    // unprovable, and the table stays as the winner left it
+    val p3 = freshTable()
+    SnapshotStore.commit(Seq((1L, 1L), (2L, 2L)).toDF("id", "v"), p3,
+      statsKey = Some("id"))
+    val s3 = SnapshotStore.latestVersion(p3)
+    SnapshotStore.commit(Seq((Option.empty[Long], 10L)).toDF("id", "v"), p3,
+      SaveMode.Append)
+    val before3 = SnapshotStore.read(spark, p3)
+    val (files3, rows3) = (before3.inputFiles.toSet, before3.collect().toSet)
+    assert(rows3.size == 3)
+    intercept[SnapshotStore.VersionConflictException] {
+      SnapshotStore.mergeCommitIf(spark, p3,
+        Seq((2L, -2L)).toDF("id", "v"), "id", s3)
+    }
+    val after3 = SnapshotStore.read(spark, p3)
+    assert(after3.inputFiles.toSet == files3)
+    assert(after3.collect().toSet == rows3)
   }
 
   test("column mapping: rename/drop are metadata-only commits, CDC classifies via physical ids") {
