@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.CacheRegistry.Tracked
-import graft.sinks.TableWriter
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -40,7 +39,8 @@ object DedupIndex {
     concat_ws(":", bk.getField("band").cast("string"), bk.getField("key"))
 
   /** The two index frames for a document set: (bands, shingles) —
-    * shared by the initial build and the daily append. */
+    * shared by the initial build, the daily append and the probe's
+    * batch side. */
   private def indexFrames(docs: DataFrame, shingleN: Int, numPerm: Int,
                           bands: Int): (DataFrame, DataFrame) = {
     val sh = Dedup.shingled(docs, shingleN).persistTracked()
@@ -51,15 +51,16 @@ object DedupIndex {
     (banded, sh.select(col("doc_id").as("dup_of"), col("sh")))
   }
 
+  private def index(prefix: String) = StoredIndex.Keyed(s"${prefix}_bands",
+    s"${prefix}_shingles", StoredIndex.Tombstones(s"${prefix}_dead", "dup_of"))
+
   /** Build and persist the corpus index. One pass over `corpus`
     * computes shingles and signatures; the two bucketed writes are the
     * only shuffles (each a hash repartition on its bucket key). */
   def writeIndex(corpus: DataFrame, prefix: String, buckets: Int = 8,
-                 shingleN: Int = 3, numPerm: Int = 32, bands: Int = 8): Unit = {
-    val (banded, shingles) = indexFrames(corpus, shingleN, numPerm, bands)
-    TableWriter.writeBucketed(banded, s"${prefix}_bands", buckets, "bk")
-    TableWriter.writeBucketed(shingles, s"${prefix}_shingles", buckets, "dup_of")
-  }
+                 shingleN: Int = 3, numPerm: Int = 32, bands: Int = 8): Unit =
+    index(prefix).store(indexFrames(corpus, shingleN, numPerm, bands),
+      buckets, append = false)
 
   /** Append a day's accepted batch into the stored index — the
     * deployment loop: probe today's batch (dedup decisions), then fold
@@ -68,94 +69,34 @@ object DedupIndex {
     * 2023 warehouse, 2024.R:1-5). Cost is O(batch): only the batch's
     * signatures are computed, and each bucketed append shuffles the
     * batch's skinny rows once — the stored corpus index is never read,
-    * re-shuffled, or rewritten. Appends add files per bucket (scans
-    * stay bucketed; see TableWriter.appendBucketed for the sort
-    * caveat), so run [[compactIndex]] at whatever cadence the file
-    * count warrants. */
+    * re-shuffled, or rewritten. Run [[compactIndex]] at whatever
+    * cadence the file count warrants. */
   def appendIndex(batch: DataFrame, prefix: String, buckets: Int = 8,
-                  shingleN: Int = 3, numPerm: Int = 32, bands: Int = 8): Unit = {
-    val (banded, shingles) = indexFrames(batch, shingleN, numPerm, bands)
-    TableWriter.appendBucketed(banded, s"${prefix}_bands", buckets, "bk")
-    TableWriter.appendBucketed(shingles, s"${prefix}_shingles", buckets, "dup_of")
-  }
-
-  // ——— delete propagation (r18): the GDPR path for stored indexes ———
-
-  private def deadTable(prefix: String) = s"${prefix}_dead"
-
-  private[operators] def deadIds(spark: SparkSession, prefix: String)
-      : Option[DataFrame] =
-    if (spark.catalog.tableExists(deadTable(prefix)))
-      Some(TableWriter.readTable(spark, deadTable(prefix)))
-    else None
+                  shingleN: Int = 3, numPerm: Int = 32, bands: Int = 8): Unit =
+    index(prefix).store(indexFrames(batch, shingleN, numPerm, bands),
+      buckets, append = true)
 
   /** Propagate a corpus DELETE into the stored index (r18): the keys —
     * e.g. a [[graft.sinks.SnapshotStore]] CDC delta's `delete` rows —
-    * land in a tiny `<prefix>_dead` tombstone table (O(batch), no
-    * index read), and every [[probe]] anti-joins candidates against it
-    * at ADMISSION (broadcast-sized — tombstones are bounded by the
-    * compaction cadence), so a deleted document is never returned as a
-    * dup_of again the moment the delete lands. [[compactIndex]]
-    * MATERIALIZES the tombstones — dead rows drop out of the bucketed
-    * rewrite it already does and the tombstone table is cleared — the
-    * deletion-vector discipline applied to the index: mark O(batch)
-    * now, rewrite O(index) only at maintenance. (Deleting in place is
-    * not O(batch) here by construction: a doc's band keys hash across
-    * ALL `bk` buckets, so an eager rewrite would touch every bucket.)
+    * land in a tiny `<prefix>_dead` tombstone table; every [[probe]]
+    * drops them at admission, so a deleted document is never returned
+    * as a dup_of once the delete lands; [[compactIndex]] materializes
+    * them. (Deleting in place is not
+    * O(batch) here by construction: a doc's band keys hash across ALL
+    * `bk` buckets, so an eager rewrite would touch every bucket.)
     * `keys` is any single-column frame of doc ids. */
-  def delete(spark: SparkSession, keys: DataFrame, prefix: String): Unit = {
-    val k = keys.select(col(keys.columns.head).as("dup_of")).distinct()
-    if (spark.catalog.tableExists(deadTable(prefix)))
-      TableWriter.appendBucketed(k, deadTable(prefix), 1, "dup_of")
-    else TableWriter.writeBucketed(k, deadTable(prefix), 1, "dup_of")
-  }
+  def delete(spark: SparkSession, keys: DataFrame, prefix: String): Unit =
+    index(prefix).dead.add(spark, keys)
 
-  /** Compact an appended index back to ONE file per bucket. A generic
-    * parquet-dir compaction (TableWriter.compact) would corrupt a
-    * bucketed table — the file→bucket mapping is encoded in the file
-    * NAMES the bucketed writer produces — so compaction here is a
-    * bucketed REWRITE: read each table, repartition on its bucket key
-    * with the bucket count (repartition and bucketBy share the
-    * murmur3+pmod mapping, so every task holds exactly one bucket's
-    * rows and the bucketed writer emits exactly one file per
-    * non-empty bucket), write to a staging table, then swap by
-    * catalog rename. Cost: one full index read + one shuffle + one
-    * write — run it when probe-plan file counts warrant, not daily.
-    * The swap is two catalog ops (drop + rename), not atomic: a crash
-    * between them loses only the LIVE name, with the data intact in
-    * the staging table — re-running compactIndex (or renaming
-    * manually) recovers; same recovery contract as TableWriter
-    * .compact's documented two-rename window. */
+  /** Compact an appended index back to ONE file per bucket, dropping
+    * tombstoned documents. A generic parquet-dir compaction
+    * (TableWriter.compact) would corrupt a bucketed table — the
+    * file→bucket mapping is encoded in the file NAMES the bucketed
+    * writer produces — so this is a bucketed rewrite
+    * (TableWriter.rewriteBucketed). */
   def compactIndex(spark: SparkSession, prefix: String,
-                   buckets: Int = 8): Unit = {
-    for ((table, key) <- Seq(s"${prefix}_bands" -> "bk",
-                             s"${prefix}_shingles" -> "dup_of")) {
-      val tmp = s"${table}_compact_tmp"
-      // Read the table's FILES, not the table: a bucketed scan reports
-      // HashPartitioning(key, buckets), which makes the repartition
-      // below a no-op exchange that EnsureRequirements elides — and the
-      // then-unreferenced bucketed layout gets planned as a plain
-      // multi-file scan, so the write sees arbitrary partitions and
-      // emits one file per (task × bucket) instead of per bucket.
-      // A path read carries no partitioning claim, so the repartition
-      // survives and each write task holds exactly one bucket.
-      val loc = spark.sql(s"DESCRIBE TABLE EXTENDED $table")
-        .filter(col("col_name") === "Location").head.getString(1)
-      // tombstone MATERIALIZATION (r18): dead docs drop out of the
-      // rewrite — both tables key rows by dup_of, one broadcast
-      // anti-join each
-      val raw = spark.read.parquet(loc)
-      val rewritten = deadIds(spark, prefix)
-        .fold(raw)(d => raw.join(broadcast(d), Seq("dup_of"), "left_anti"))
-        .repartition(buckets, col(key))
-      TableWriter.writeBucketed(rewritten, tmp, buckets, key)
-      spark.sql(s"DROP TABLE $table")
-      spark.sql(s"ALTER TABLE $tmp RENAME TO $table")
-    }
-    // tombstones materialized: clear them
-    if (spark.catalog.tableExists(deadTable(prefix)))
-      spark.sql(s"DROP TABLE ${deadTable(prefix)}"): Unit
-  }
+                   buckets: Int = 8): Unit =
+    index(prefix).compact(spark, buckets)
 
   /** Probe a batch of documents against a stored index. Returns
     * (new_doc, dup_of, jaccard) — the same contract as
@@ -164,27 +105,14 @@ object DedupIndex {
   def probe(spark: SparkSession, batch: DataFrame, prefix: String,
             threshold: Double = 0.5, shingleN: Int = 3,
             numPerm: Int = 32, bands: Int = 8): DataFrame = {
-    val shB = Dedup.shingled(batch, shingleN).persistTracked()
-    val bandedB = Dedup.minhashSignatures(shB, numPerm, Dedup.md5Hash31)
-      .select(col("doc_id").as("new_doc"),
-        explode(Dedup.bandKeysStr(col("sig"), bands, numPerm / bands)).as("bk"))
-      .select(col("new_doc"), flatBk(col("bk")).as("bk"))
-    val cand0 = bandedB
-      .join(TableWriter.readTable(spark, s"${prefix}_bands"), Seq("bk"))
-      .select(col("new_doc"), col("dup_of")).distinct()
-    // deleted docs never come back as dup targets (r18): admission-time
-    // anti-join against the tombstones — broadcast-sized
-    val cand = deadIds(spark, prefix)
-      .fold(cand0)(d => cand0.join(broadcast(d), Seq("dup_of"), "left_anti"))
-    cand
-      .join(shB.select(col("doc_id").as("new_doc"), col("sh").as("sh_a")), Seq("new_doc"))
-      .join(TableWriter.readTable(spark, s"${prefix}_shingles")
-        .select(col("dup_of"), col("sh").as("sh_b")), Seq("dup_of"))
-      .withColumn("jaccard",
+    val (banded, shingles) = indexFrames(batch, shingleN, numPerm, bands)
+    index(prefix).probe(spark, "new_doc",
+      banded.select(col("dup_of").as("new_doc"), col("bk")),
+      shingles.select(col("dup_of").as("new_doc"), col("sh").as("sh_a")),
+      _.select(col("dup_of"), col("sh").as("sh_b")),
+      "jaccard", _.withColumn("jaccard",
         size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b"))))
-      .filter(col("jaccard") >= threshold)
-      .select(col("new_doc"), col("dup_of"), col("jaccard"))
-      .orderBy(col("new_doc"), col("dup_of"))
+          size(array_union(col("sh_a"), col("sh_b")))),
+      threshold)
   }
 }

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.CacheRegistry.Tracked
-import graft.sinks.TableWriter
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -59,69 +58,35 @@ object EmbedIndex {
     (buckets, base.select(col("dup_of"), col("m"), col("aa")))
   }
 
+  private def index(prefix: String) = StoredIndex.Keyed(s"${prefix}_ebuckets",
+    s"${prefix}_evectors", StoredIndex.Tombstones(s"${prefix}_edead", "dup_of"))
+
   /** Build and persist the corpus index: one pass computes sketches,
     * the two bucketed writes are the only shuffles. */
   def writeIndex(corpus: DataFrame, prefix: String, buckets: Int = 8,
-                 nTables: Int = 8, bits: Int = 6): Unit = {
-    val (bk, vec) = indexFrames(corpus, nTables, bits)
-    TableWriter.writeBucketed(bk, s"${prefix}_ebuckets", buckets, "bk")
-    TableWriter.writeBucketed(vec, s"${prefix}_evectors", buckets, "dup_of")
-  }
+                 nTables: Int = 8, bits: Int = 6): Unit =
+    index(prefix).store(indexFrames(corpus, nTables, bits), buckets, append = false)
 
   /** Fold an accepted batch into the stored index (tomorrow's batches
     * probe against it). O(batch); the stored corpus side is never
-    * read, re-shuffled, or rewritten — see DedupIndex.appendIndex for
-    * the file-count/compaction trade. */
+    * read, re-shuffled, or rewritten. */
   def appendIndex(batch: DataFrame, prefix: String, buckets: Int = 8,
-                  nTables: Int = 8, bits: Int = 6): Unit = {
-    val (bk, vec) = indexFrames(batch, nTables, bits)
-    TableWriter.appendBucketed(bk, s"${prefix}_ebuckets", buckets, "bk")
-    TableWriter.appendBucketed(vec, s"${prefix}_evectors", buckets, "dup_of")
-  }
-
-  // ——— delete propagation (r18): [[DedupIndex.delete]]'s contract ———
-
-  private def deadTable(prefix: String) = s"${prefix}_edead"
-
-  private[operators] def deadIds(spark: SparkSession, prefix: String)
-      : Option[DataFrame] =
-    if (spark.catalog.tableExists(deadTable(prefix)))
-      Some(TableWriter.readTable(spark, deadTable(prefix)))
-    else None
+                  nTables: Int = 8, bits: Int = 6): Unit =
+    index(prefix).store(indexFrames(batch, nTables, bits), buckets, append = true)
 
   /** Propagate a corpus delete into the stored embedding index:
-    * O(batch) tombstone append; [[probe]] anti-joins candidates at
-    * admission; [[compactIndex]] materializes. Same reasoning as
-    * [[DedupIndex.delete]] — a vector's LSH keys hash across all `bk`
-    * buckets, so eager removal would touch every bucket. */
-  def delete(spark: SparkSession, keys: DataFrame, prefix: String): Unit = {
-    val k = keys.select(col(keys.columns.head).as("dup_of")).distinct()
-    if (spark.catalog.tableExists(deadTable(prefix)))
-      TableWriter.appendBucketed(k, deadTable(prefix), 1, "dup_of")
-    else TableWriter.writeBucketed(k, deadTable(prefix), 1, "dup_of")
-  }
+    * O(batch) tombstone append; [[probe]] drops the vectors at
+    * admission; [[compactIndex]] materializes. A vector's LSH keys
+    * hash across all `bk` buckets, so eager removal would touch every
+    * bucket. */
+  def delete(spark: SparkSession, keys: DataFrame, prefix: String): Unit =
+    index(prefix).dead.add(spark, keys)
 
-  /** Compact appended index tables back to one file per bucket —
-    * identical contract to [[DedupIndex.compactIndex]], r18: dead
-    * vectors materialize out of the rewrite, tombstones cleared. */
+  /** Compact appended index tables back to one file per bucket; dead
+    * vectors drop out of the rewrite and the tombstones are cleared. */
   def compactIndex(spark: SparkSession, prefix: String,
-                   buckets: Int = 8): Unit = {
-    for ((table, key) <- Seq(s"${prefix}_ebuckets" -> "bk",
-                             s"${prefix}_evectors" -> "dup_of")) {
-      val tmp = s"${table}_compact_tmp"
-      val loc = spark.sql(s"DESCRIBE TABLE EXTENDED $table")
-        .filter(col("col_name") === "Location").head.getString(1)
-      val raw = spark.read.parquet(loc)
-      val rewritten = deadIds(spark, prefix)
-        .fold(raw)(d => raw.join(broadcast(d), Seq("dup_of"), "left_anti"))
-        .repartition(buckets, col(key))
-      TableWriter.writeBucketed(rewritten, tmp, buckets, key)
-      spark.sql(s"DROP TABLE $table")
-      spark.sql(s"ALTER TABLE $tmp RENAME TO $table")
-    }
-    if (spark.catalog.tableExists(deadTable(prefix)))
-      spark.sql(s"DROP TABLE ${deadTable(prefix)}"): Unit
-  }
+                   buckets: Int = 8): Unit =
+    index(prefix).compact(spark, buckets)
 
   /** Probe a batch of vectors against a stored index. Returns
     * (new_vec, dup_of, cos_ppm) for every indexed vector within the
@@ -146,23 +111,12 @@ object EmbedIndex {
             col("b0").bitwiseXOR(lit(1L << j))): _*)).as("b"))
         .select(col("new_vec"),
           concat_ws(":", col("tb"), col("b").cast("string")).as("bk"))
-    val cand0 = probed
-      .join(TableWriter.readTable(spark, s"${prefix}_ebuckets"), Seq("bk"))
-      .select(col("new_vec"), col("dup_of")).distinct()
-    // deleted vectors never come back as dup targets (r18)
-    val cand = deadIds(spark, prefix)
-      .fold(cand0)(d => cand0.join(broadcast(d), Seq("dup_of"), "left_anti"))
-    cand
-      .join(vec.select(col("dup_of").as("new_vec"), col("m").as("ma"),
-        col("aa")), Seq("new_vec"))
-      .join(TableWriter.readTable(spark, s"${prefix}_evectors")
-        .select(col("dup_of"), col("m").as("mb"), col("aa").as("bb")),
-        Seq("dup_of"))
-      .withColumn("dot", graft.functions.VectorFunctions
-        .dotProduct(col("ma"), col("mb")).cast("long"))
-      .withColumn("cos_ppm", expr(Dedup.cosPpmSql))
-      .filter(col("cos_ppm") >= thresholdPpm)
-      .select(col("new_vec"), col("dup_of"), col("cos_ppm"))
-      .orderBy(col("new_vec"), col("dup_of"))
+    index(prefix).probe(spark, "new_vec", probed,
+      vec.select(col("dup_of").as("new_vec"), col("m").as("ma"), col("aa")),
+      _.select(col("dup_of"), col("m").as("mb"), col("aa").as("bb")),
+      "cos_ppm", _.withColumn("dot", graft.functions.VectorFunctions
+          .dotProduct(col("ma"), col("mb")).cast("long"))
+        .withColumn("cos_ppm", expr(Dedup.cosPpmSql)),
+      thresholdPpm)
   }
 }

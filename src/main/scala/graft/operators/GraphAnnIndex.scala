@@ -76,13 +76,8 @@ object GraphAnnIndex {
 
   // ——— delete propagation (r18): tombstoned vertices ———
 
-  private def deadTable(prefix: String) = s"${prefix}_gdead"
-
-  private[operators] def deadIds(spark: SparkSession, prefix: String)
-      : Option[DataFrame] =
-    if (spark.catalog.tableExists(deadTable(prefix)))
-      Some(TableWriter.readTable(spark, deadTable(prefix)))
-    else None
+  private def dead(prefix: String) =
+    StoredIndex.Tombstones(s"${prefix}_gdead", "vec_id")
 
   /** Propagate a corpus delete into the stored graph (r18, the
     * filtered-DiskANN delete rule): the keys land in a tombstone
@@ -92,20 +87,8 @@ object GraphAnnIndex {
     * at ADMISSION, so a deleted vector is never returned.
     * [[compactIndex]] materializes: dead vertices and their edges
     * leave the stored tables and the surviving nodes re-rank. */
-  def delete(spark: SparkSession, keys: DataFrame, prefix: String): Unit = {
-    val k = keys.select(col(keys.columns.head).as("vec_id")).distinct()
-    if (spark.catalog.tableExists(deadTable(prefix)))
-      TableWriter.appendBucketed(k, deadTable(prefix), 1, "vec_id")
-    else TableWriter.writeBucketed(k, deadTable(prefix), 1, "vec_id")
-  }
-
-  /** Exclude tombstoned vertices from a visited/result frame keyed by
-    * `dst` — broadcast-sized admission filter. */
-  private def noDead(spark: SparkSession, prefix: String, df: DataFrame)
-      : DataFrame =
-    deadIds(spark, prefix).fold(df)(d =>
-      df.join(broadcast(d.select(col("vec_id").as("dst"))),
-        Seq("dst"), "left_anti"))
+  def delete(spark: SparkSession, keys: DataFrame, prefix: String): Unit =
+    dead(prefix).add(spark, keys)
 
   /** Beam-search `queries` (vec_id, embedding — ids are the CALLER's
     * labels, must not collide with indexed ids) against the stored
@@ -114,17 +97,8 @@ object GraphAnnIndex {
     * the bucketed layout — no index-side Exchange, only frontier keys
     * move. Tombstoned vertices are traversed but never returned. */
   def search(spark: SparkSession, queries: DataFrame, prefix: String,
-             k: Int = 5, beam: Int = 12, hops: Int = 4): DataFrame = {
-    val edges = TableWriter.readTable(spark, s"${prefix}_gedges")
-    val v = TableWriter.readTable(spark, s"${prefix}_gvectors")
-    val entry = TableWriter.readTable(spark, s"${prefix}_gentry")
-    val q = unitize(queries)
-    // identity hint: the stored side must NOT be broadcast — reading
-    // it in place through the bucketed layout is the whole point
-    val visited = GraphAnn.searchGraph(edges, v, q, entry, beam, hops,
-      better, identity)
-    GraphAnn.topK(noDead(spark, prefix, visited), k, "cosine", -col("d"))
-  }
+             k: Int = 5, beam: Int = 12, hops: Int = 4): DataFrame =
+    searchAdmitted(spark, queries, prefix, k, beam, hops)(identity)
 
   /** FILTERED search (the filtered-DiskANN / vector-store rule):
     * traverse the FULL stored graph — restricting traversal to
@@ -140,16 +114,21 @@ object GraphAnnIndex {
     * metadata — budget-sized, never corpus-sized. */
   def searchWhere(spark: SparkSession, queries: DataFrame, prefix: String,
                   meta: DataFrame, pred: Column,
-                  k: Int = 5, beam: Int = 12, hops: Int = 4): DataFrame = {
-    val edges = TableWriter.readTable(spark, s"${prefix}_gedges")
-    val v = TableWriter.readTable(spark, s"${prefix}_gvectors")
-    val entry = TableWriter.readTable(spark, s"${prefix}_gentry")
-    val q = unitize(queries)
-    val visited = GraphAnn.searchGraph(edges, v, q, entry, beam, hops,
-      better, identity)
-    val admissible = meta.filter(pred).select(col("vec_id").as("dst"))
-    GraphAnn.topK(
-      noDead(spark, prefix, visited.join(admissible, Seq("dst"), "left_semi")),
+                  k: Int = 5, beam: Int = 12, hops: Int = 4): DataFrame =
+    searchAdmitted(spark, queries, prefix, k, beam, hops)(_.join(
+      meta.filter(pred).select(col("vec_id").as("dst")), Seq("dst"), "left_semi"))
+
+  /** [[search]] with `admit` applied to the visited set before the
+    * tombstones and the top-k. */
+  private def searchAdmitted(spark: SparkSession, queries: DataFrame,
+                             prefix: String, k: Int, beam: Int, hops: Int)
+                            (admit: DataFrame => DataFrame): DataFrame = {
+    // identity hint: the stored side must NOT be broadcast — reading
+    // it in place through the bucketed layout is the whole point
+    val visited = GraphAnn.searchGraph(spark.table(s"${prefix}_gedges"),
+      spark.table(s"${prefix}_gvectors"), unitize(queries),
+      spark.table(s"${prefix}_gentry"), beam, hops, better, identity)
+    GraphAnn.topK(dead(prefix).admit(spark, admit(visited), "dst"),
       k, "cosine", -col("d"))
   }
 
@@ -180,7 +159,7 @@ object GraphAnnIndex {
     * only; exactness comes from [[searchPq]]'s re-rank. */
   def writePq(spark: SparkSession, prefix: String, buckets: Int = 8,
               dimsPerSub: Int = 8, nCent: Int = 256, iters: Int = 2): Unit = {
-    val v = TableWriter.readTable(spark, s"${prefix}_gvectors")
+    val v = spark.table(s"${prefix}_gvectors")
     val dims = v.select(size(col("e"))).head().getInt(0)
     require(dims % dimsPerSub == 0,
       s"writePq: $dims dims not divisible by $dimsPerSub")
@@ -240,10 +219,10 @@ object GraphAnnIndex {
   def searchPq(spark: SparkSession, queries: DataFrame, prefix: String,
                k: Int = 5, beam: Int = 24, hops: Int = 4,
                rerank: Int = 64): DataFrame = {
-    val edges = TableWriter.readTable(spark, s"${prefix}_gedges")
-    val codes = TableWriter.readTable(spark, s"${prefix}_gpqcodes")
-    val cent = TableWriter.readTable(spark, s"${prefix}_gpqcent")
-    val entry = TableWriter.readTable(spark, s"${prefix}_gentry")
+    val edges = spark.table(s"${prefix}_gedges")
+    val codes = spark.table(s"${prefix}_gpqcodes")
+    val cent = spark.table(s"${prefix}_gpqcent")
+    val entry = spark.table(s"${prefix}_gentry")
     val nCent = cent.agg(max(col("c"))).head().getInt(0) + 1
     val dims = cent.agg(countDistinct(col("s")) * size(first(col("cm"))))
       .head().getLong(0).toInt
@@ -280,10 +259,10 @@ object GraphAnnIndex {
     // exact re-rank: full vectors for only the ADC-best candidates
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("qid")).orderBy(col("d"), col("dst"))
-    val cand = noDead(spark, prefix, visited.filter(col("dst") =!= col("qid")))
+    val cand = dead(prefix).admit(spark, visited.filter(col("dst") =!= col("qid")), "dst")
       .withColumn("rn", row_number().over(w)).filter(col("rn") <= rerank)
       .select(col("qid"), col("dst"))
-    val v = TableWriter.readTable(spark, s"${prefix}_gvectors")
+    val v = spark.table(s"${prefix}_gvectors")
     val exact = cand
       .join(v.select(col("vec_id").as("dst"), col("e").as("de")), Seq("dst"))
       .join(broadcast(q.select(col("vec_id").as("qid"), col("e").as("qe"))),
@@ -313,54 +292,37 @@ object GraphAnnIndex {
 
   /** Maintenance: re-rank every node to its best `degree` out-edges
     * (inserts accumulate reverse edges past the bound) and rewrite
-    * both big tables at one file per bucket — [[EmbedIndex
-    * .compactIndex]]'s contract plus the degree restore. */
+    * the tables at one file per bucket (TableWriter.rewriteBucketed),
+    * dropping tombstoned vertices. */
   def compactIndex(spark: SparkSession, prefix: String, buckets: Int = 8,
                    degree: Int = 10): Unit = {
     // tombstone MATERIALIZATION (r18): dead vertices leave the vector
     // table and every edge touching one leaves the graph before the
     // degree re-rank — the surviving nodes re-pick their best edges
     // from live neighbors only
-    val v0 = TableWriter.readTable(spark, s"${prefix}_gvectors")
-    val e0 = TableWriter.readTable(spark, s"${prefix}_gedges").distinct()
-    val (v, edgesLive) = deadIds(spark, prefix) match {
-      case None => (v0, e0)
-      case Some(d) =>
-        (v0.join(broadcast(d), Seq("vec_id"), "left_anti"),
-          e0.join(broadcast(d.select(col("vec_id").as("src"))),
-              Seq("src"), "left_anti")
-            .join(broadcast(d.select(col("vec_id").as("dst"))),
-              Seq("dst"), "left_anti"))
-    }
+    val d = dead(prefix)
+    val v = d.admit(spark, spark.table(s"${prefix}_gvectors"))
+    val edgesLive = d.admit(spark,
+      d.admit(spark, spark.table(s"${prefix}_gedges").distinct(), "src"), "dst")
     val ranked = GraphAnn.bestPerSrc(edgesLive, v, degree, better, identity)
       .select(col("src"), col("dst"))
     // entry points must stay LIVE vertices: drop dead ones and top the
     // set back up from the smallest surviving ids (the writeIndex
     // convention) so searches never seed on a removed vector
-    val entry0 = TableWriter.readTable(spark, s"${prefix}_gentry")
+    val entry0 = spark.table(s"${prefix}_gentry")
     val nEntry = math.max(1L, entry0.count()).toInt
     // MATERIALIZED on the driver (entry sets are a handful of rows)
-    // before the loop below drops the tables these plans read from
-    val entryPlan = deadIds(spark, prefix) match {
-      case None => entry0
-      case Some(d) =>
-        val kept = entry0.join(broadcast(d), Seq("vec_id"), "left_anti")
-        if (kept.count() >= 1) kept
-        else v.select(col("vec_id")).orderBy(col("vec_id")).limit(nEntry)
+    // before the rewrites below drop the tables these plans read from
+    val entryPlan = d.ids(spark).fold(entry0) { _ =>
+      val kept = d.admit(spark, entry0)
+      if (kept.count() >= 1) kept
+      else v.select(col("vec_id")).orderBy(col("vec_id")).limit(nEntry)
     }
     val entryLive = spark.createDataFrame(
       java.util.Arrays.asList(entryPlan.collect(): _*), entryPlan.schema)
-    for ((table, key, bk, df) <- Seq(
-        (s"${prefix}_gedges", "src", buckets, ranked),
-        (s"${prefix}_gvectors", "vec_id", buckets, v),
-        (s"${prefix}_gentry", "vec_id", 1, entryLive))) {
-      val tmp = s"${table}_compact_tmp"
-      TableWriter.writeBucketed(
-        df.repartition(bk, col(key)), tmp, bk, key)
-      spark.sql(s"DROP TABLE $table")
-      spark.sql(s"ALTER TABLE $tmp RENAME TO $table")
-    }
-    if (spark.catalog.tableExists(deadTable(prefix)))
-      spark.sql(s"DROP TABLE ${deadTable(prefix)}"): Unit
+    TableWriter.rewriteBucketed(ranked, s"${prefix}_gedges", buckets, "src")
+    TableWriter.rewriteBucketed(v, s"${prefix}_gvectors", buckets, "vec_id")
+    TableWriter.rewriteBucketed(entryLive, s"${prefix}_gentry", 1, "vec_id")
+    d.clear(spark)
   }
 }

@@ -2038,8 +2038,9 @@ object SnapshotStore {
                   key: String): Long =
     withLock(path) {
       val v = latestVersion(path)
-      mergeLocked(spark, path, toPhysicalDf(path, v, df),
-        physicalOf(path, v, key))
+      val (pdf, pk) = (toPhysicalDf(path, v, df), physicalOf(path, v, key))
+      mergeLocked(spark, path, pdf, pk,
+        batchBounds(pdf, pk, s"mergeCommit: empty batch for $path"))
     }
 
   /** Optimistic MERGE (r16) — [[mergeCommit]] for a writer that
@@ -2071,20 +2072,20 @@ object SnapshotStore {
       val cur = latestVersion(path)
       val pdf = toPhysicalDf(path, cur, df)
       val pk = physicalOf(path, cur, key)
+      val bounds = batchBounds(pdf, pk, s"mergeCommitIf: empty batch for $path")
       // rebase proof first: a non-rebasable commit must not pay the
       // constraint aggregate while holding the table lock
       if (cur != expectedVersion)
-        requireDisjointSince(spark, path, expectedVersion, cur, pk,
-          batchBounds(pdf, pk, s"mergeCommitIf: empty batch for $path"))
-      mergeLocked(spark, path, pdf, pk)
+        requireDisjointSince(spark, path, expectedVersion, cur, pk, bounds)
+      mergeLocked(spark, path, pdf, pk, bounds)
     }
 
   private def mergeLocked(spark: SparkSession, path: String, df: DataFrame,
-                          key: String): Long = {
+                          key: String, bounds: (Long, Long)): Long = {
     import org.apache.spark.sql.functions.col
     val v = latestVersion(path)
     require(v > 0, s"no committed snapshot under $path")
-    val (bLo, bHi) = batchBounds(df, key, s"mergeCommit: empty batch for $path")
+    val (bLo, bHi) = bounds
     // distributed per-KEY prune (shared with readWhere): the sidecar's
     // primary column may differ from the merge key — pruning with the
     // wrong column's ranges would classify files as untouched whose
@@ -2269,8 +2270,9 @@ object SnapshotStore {
                    key: String): Long =
     withLock(path) {
       val v = latestVersion(path)
-      deleteLocked(spark, path, toPhysicalDf(path, v, keys),
-        physicalOf(path, v, key))
+      val (pks, pk) = (toPhysicalDf(path, v, keys), physicalOf(path, v, key))
+      deleteLocked(spark, path, pks, pk,
+        batchBounds(pks, pk, s"deleteCommit: empty key set for $path"))
     }
 
   /** Optimistic DELETE (r16): [[deleteCommit]] with the same
@@ -2285,10 +2287,10 @@ object SnapshotStore {
       val cur = latestVersion(path)
       val pks = toPhysicalDf(path, cur, keys)
       val pk = physicalOf(path, cur, key)
+      val bounds = batchBounds(pks, pk, s"deleteCommitIf: empty key set for $path")
       if (cur != expectedVersion)
-        requireDisjointSince(spark, path, expectedVersion, cur, pk,
-          batchBounds(pks, pk, s"deleteCommitIf: empty key set for $path"))
-      deleteLocked(spark, path, pks, pk)
+        requireDisjointSince(spark, path, expectedVersion, cur, pk, bounds)
+      deleteLocked(spark, path, pks, pk, bounds)
     }
 
   /** The batch's [min, max] over `key`, as longs. */
@@ -2347,13 +2349,13 @@ object SnapshotStore {
   }
 
   private def deleteLocked(spark: SparkSession, path: String,
-                           keys: DataFrame, key: String): Long = {
+                           keys: DataFrame, key: String,
+                           bounds: (Long, Long)): Long = {
     import org.apache.spark.sql.functions.col
     val v = latestVersion(path)
     require(v > 0, s"no committed snapshot under $path")
     val ks = keys.select(col(key)).distinct()
-    val (bLo, bHi) =
-      batchBounds(ks, key, s"deleteCommit: empty key set for $path")
+    val (bLo, bHi) = bounds
     // distributed per-KEY prune (not the sidecar's primary column) — a
     // takedown by `id` on a table stats-tracked on `ts` must not skip
     // files whose ts-range happens to be disjoint from the id-bounds;
@@ -2830,14 +2832,21 @@ object SnapshotStore {
       val dropped = vacuumLocked(path, v, keepVersions)
       val keepFrom = math.max(1L, v - keepVersions + 1)
       import spark.implicits._
+      import org.apache.spark.sql.functions.{col, count, lit}
       val st = store(path)
       val live = (keepFrom to v).flatMap(manifest(path, _)).distinct
       dvVisible(path, v)._2.foreach { w =>
         val d = dvDir(path, w)
         if (st.exists(d)) {
           val rows = spark.read.parquet(d)
-          val kept = rows.join(live.toDF("path"), Seq("path"), "left_semi")
-          val (n0, n1) = (rows.count(), kept.count())
+          val liveDf = live.toDF("path")
+          val kept = rows.join(liveDf, Seq("path"), "left_semi")
+          // both counts in one aggregate: all rows, and those whose
+          // file is live (live paths are distinct, so the left join
+          // keeps each row once)
+          val c = rows.join(liveDf.withColumn("_live", lit(1)), Seq("path"), "left")
+            .agg(count(lit(1)), count(col("_live"))).head()
+          val (n0, n1) = (c.getLong(0), c.getLong(1))
           if (n1 == 0L) dropDvDir(path, w)
           else if (n1 < n0 && st.renameSupported) {
             // CRASH-SAFE swap (r18): write the GC'd rows to a sibling

@@ -30,13 +30,30 @@ object TableWriter {
     * daily-index deployment path. NOTE compact() below must NOT be
     * pointed at a bucketed table's directory — the file→bucket
     * mapping lives in the writer's file NAMES and a path-level
-    * rewrite destroys it; use a bucketed rewrite instead
-    * (DedupIndex.compactIndex is the index instance). */
+    * rewrite destroys it; use [[rewriteBucketed]] instead. */
   def appendBucketed(df: DataFrame, table: String, buckets: Int, keyCol: String): Unit =
     df.write.bucketBy(buckets, keyCol).sortBy(keyCol)
       .mode(SaveMode.Append).format("parquet").saveAsTable(table)
 
-  def readTable(spark: SparkSession, table: String): DataFrame = spark.table(table)
+  /** Replace bucketed `table` with the rows of `df` (typically the
+    * table itself, filtered) at ONE file per non-empty bucket: write
+    * `<table>_compact_tmp`, drop `table`, rename the staging table to
+    * it. The exchange keys on the bucket id itself, so each bucket's
+    * rows land in one write task whatever `df`'s partitioning. (An
+    * exchange on the key would not do: over a bucketed scan of the same
+    * key and count it is a no-op EnsureRequirements elides, after which
+    * the scan is planned unbucketed and every task writes a file per
+    * bucket it holds.) The swap is two catalog ops, not atomic: a crash
+    * between them loses only the live NAME, and renaming the staging
+    * table back recovers the data. */
+  def rewriteBucketed(df: DataFrame, table: String, buckets: Int, keyCol: String): Unit = {
+    import org.apache.spark.sql.functions.{col, hash, lit, pmod}
+    val tmp = s"${table}_compact_tmp"
+    writeBucketed(df.repartition(buckets, pmod(hash(col(keyCol)), lit(buckets))),
+      tmp, buckets, keyCol)
+    df.sparkSession.sql(s"DROP TABLE $table")
+    df.sparkSession.sql(s"ALTER TABLE $tmp RENAME TO $table"): Unit
+  }
 
   /** Parquet BLOOM FILTERS on point-lookup columns (r15): min/max
     * footer stats prune range scans but are useless for a point lookup

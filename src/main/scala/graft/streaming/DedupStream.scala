@@ -1,7 +1,5 @@
 package graft.streaming
 
-import graft.CacheRegistry
-import graft.CacheRegistry.Tracked
 import graft.operators.DedupIndex
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
@@ -40,33 +38,8 @@ object DedupStream {
     * `batch` must carry (doc_id, text). */
   def dedupBatch(prefix: String, threshold: Double = 0.5)
                 (out: (DataFrame, Long) => Unit): (Dataset[Row], Long) => Unit =
-    (batch, batchId) => CacheRegistry.withKey(s"dedup-stream-$prefix") {
-      var accepted: DataFrame = null
-      try {
-        val docs = batch.select(col("doc_id"), col("text"))
-        val dups = DedupIndex.probe(docs.sparkSession, docs, prefix, threshold)
-          .select(col("new_doc").as("doc_id")).distinct()
-        // accepted's PLAN references the index tables (through the
-        // probe), and the append below mutates them — Spark's
-        // recacheByPath would then RECOMPUTE a persist()ed accepted
-        // against the post-append index, where every accepted doc
-        // matches itself and the frame silently empties. localCheckpoint
-        // materializes the rows and CUTS the lineage, freezing accepted
-        // against the index mutation (and keeping the append job from
-        // reading the very table it writes). Eager by default.
-        accepted = docs.join(dups, Seq("doc_id"), "left_anti")
-          .localCheckpoint()
-        DedupIndex.appendIndex(accepted, prefix)
-        out(accepted, batchId)
-      } finally {
-        CacheRegistry.drain(s"dedup-stream-$prefix")
-        // checkpoint blocks live at the RDD layer, invisible to the
-        // registry — free exactly the one this batch created. (A
-        // global persistent-RDD set diff would also sweep caches other
-        // queries on the shared context created DURING the batch — the
-        // ADVICE r14 cross-job hazard.)
-        if (accepted != null)
-          graft.operators.Components.freeCheckpoint(accepted)
-      }
-    }
+    IndexIngest.batchFn(s"dedup-stream-$prefix", "doc_id", "text")(
+      docs => Some(DedupIndex.probe(docs.sparkSession, docs, prefix, threshold)
+        .select(col("new_doc").as("doc_id")).distinct()),
+      DedupIndex.appendIndex(_, prefix))(out)
 }

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.CacheRegistry
 import graft.operators.EmbedIndex
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
@@ -27,28 +26,8 @@ object EmbedStream {
     * (vec_id, embedding). */
   def dedupBatch(prefix: String, thresholdPpm: Long = 300000L)
                 (out: (DataFrame, Long) => Unit): (Dataset[Row], Long) => Unit =
-    (batch, batchId) => CacheRegistry.withKey(s"embed-stream-$prefix") {
-      var accepted: DataFrame = null
-      try {
-        val vecs = batch.select(col("vec_id"), col("embedding"))
-        val dups = EmbedIndex
-          .probe(vecs.sparkSession, vecs, prefix, thresholdPpm)
-          .select(col("new_vec").as("vec_id")).distinct()
-        // localCheckpoint freezes accepted against the index append —
-        // the same recacheByPath hazard DedupStream documents
-        accepted = vecs.join(dups, Seq("vec_id"), "left_anti")
-          .localCheckpoint()
-        EmbedIndex.appendIndex(accepted, prefix)
-        out(accepted, batchId)
-      } finally {
-        // release ONLY this batch's artifacts: the CacheRegistry-keyed
-        // frames and the accepted checkpoint's blocks. A global
-        // persistent-RDD set diff would also sweep caches other
-        // queries on the shared context created DURING the batch — a
-        // cross-job performance hazard (ADVICE r14).
-        CacheRegistry.drain(s"embed-stream-$prefix")
-        if (accepted != null)
-          graft.operators.Components.freeCheckpoint(accepted)
-      }
-    }
+    IndexIngest.batchFn(s"embed-stream-$prefix", "vec_id", "embedding")(
+      vecs => Some(EmbedIndex.probe(vecs.sparkSession, vecs, prefix, thresholdPpm)
+        .select(col("new_vec").as("vec_id")).distinct()),
+      EmbedIndex.appendIndex(_, prefix))(out)
 }

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.CacheRegistry
 import graft.operators.GraphAnnIndex
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
@@ -36,30 +35,13 @@ object GraphStream {
   def ingestBatch(prefix: String, dropCosine: Option[Double] = None,
                   degree: Int = 10, beam: Int = 12, hops: Int = 4)
                  (out: (DataFrame, Long) => Unit): (Dataset[Row], Long) => Unit =
-    (batch, batchId) => CacheRegistry.withKey(s"graph-stream-$prefix") {
-      var admitted: DataFrame = null
-      try {
-        val vecs = batch.select(col("vec_id"), col("embedding"))
-        val keep = dropCosine match {
-          case None => vecs
-          case Some(thr) =>
-            val dupIds = GraphAnnIndex
-              .search(vecs.sparkSession, vecs, prefix, k = 1, beam, hops)
-              .filter(col("rank") === 1L && col("cosine") >= thr)
-              .select(col("query_id").as("vec_id")).distinct()
-            vecs.join(dupIds, Seq("vec_id"), "left_anti")
-        }
-        // freeze admitted against the index append (the recacheByPath
-        // hazard EmbedStream documents)
-        admitted = keep.localCheckpoint()
+    IndexIngest.batchFn(s"graph-stream-$prefix", "vec_id", "embedding")(
+      vecs => dropCosine.map(thr => GraphAnnIndex
+        .search(vecs.sparkSession, vecs, prefix, k = 1, beam, hops)
+        .filter(col("rank") === 1L && col("cosine") >= thr)
+        .select(col("query_id").as("vec_id")).distinct()),
+      admitted =>
         if (!admitted.isEmpty)
-          GraphAnnIndex.insert(vecs.sparkSession, admitted, prefix,
-            degree = degree, beam = beam, hops = hops)
-        out(admitted, batchId)
-      } finally {
-        CacheRegistry.drain(s"graph-stream-$prefix")
-        if (admitted != null)
-          graft.operators.Components.freeCheckpoint(admitted)
-      }
-    }
+          GraphAnnIndex.insert(admitted.sparkSession, admitted, prefix,
+            degree = degree, beam = beam, hops = hops))(out)
 }

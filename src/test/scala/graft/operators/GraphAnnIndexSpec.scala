@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkSpec
-import graft.sinks.TableWriter
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeLike}
@@ -104,9 +103,18 @@ class GraphAnnIndexSpec extends SparkSpec {
       "gcomp", degree = 10)
     GraphAnnIndex.compactIndex(spark, "gcomp", degree = 10)
     graft.CacheRegistry.drain()
-    val maxDeg = TableWriter.readTable(spark, "gcomp_gedges")
+    val maxDeg = spark.table("gcomp_gedges")
       .groupBy("src").count().agg(max("count")).head().getLong(0)
     assert(maxDeg <= 10, s"compaction left degree $maxDeg > 10")
+    // one file per bucket, counted as StoredIndexSpec.bucketFileNames does
+    def bucketFiles(table: String): Int = new java.io.File(new java.net.URI(
+      spark.sql(s"DESCRIBE TABLE EXTENDED $table")
+        .filter(col("col_name") === "Location").head.getString(1)))
+      .listFiles((_, n) => n.endsWith(".parquet")).length
+    for ((table, most) <- Seq("gcomp_gedges" -> 8, "gcomp_gvectors" -> 8,
+                              "gcomp_gentry" -> 1))
+      assert(bucketFiles(table) <= most,
+        s"compaction left ${bucketFiles(table)} files in $table, more than $most")
     val probes = relabel(t.embeddings.filter(col("vec_id") < 3), 100000L)
     val got = GraphAnnIndex.search(spark, probes, "gcomp", k = 1).collect()
     assert(got.forall(r => r.getLong(2) == r.getLong(0) - 100000L))
@@ -120,7 +128,7 @@ class GraphAnnIndexSpec extends SparkSpec {
     import s2.implicits._
     val frontier = Seq((100001L, 150L), (100001L, 151L)).toDF("qid", "cur")
     val probe = frontier
-      .join(TableWriter.readTable(s2, "gidx_gedges")
+      .join(s2.table("gidx_gedges")
         .withColumnRenamed("src", "cur"), Seq("cur"))
     probe.count()
     def paths(p: SparkPlan, anc: List[SparkPlan]): Seq[List[SparkPlan]] = {

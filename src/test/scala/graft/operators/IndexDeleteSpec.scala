@@ -87,8 +87,7 @@ class IndexDeleteSpec extends SparkSpec {
     val victim = before.head
     // delete the victim AND one stored entry point: searches must
     // still seed and never return either
-    val entry = graft.sinks.TableWriter
-      .readTable(spark, "gdel_gentry").as[Long].head()
+    val entry = spark.table("gdel_gentry").as[Long].head()
     GraphAnnIndex.delete(spark, Seq(victim, entry).toDF("vec_id"), "gdel")
     val after = hits()
     assert(!after.contains(victim) && !after.contains(entry))
@@ -101,15 +100,14 @@ class IndexDeleteSpec extends SparkSpec {
     GraphAnnIndex.compactIndex(spark, "gdel")
     assert(!spark.catalog.tableExists("gdel_gdead"))
     // physically gone: vectors, edges, entries
-    import graft.sinks.TableWriter.readTable
-    assert(readTable(spark, "gdel_gvectors")
+    assert(spark.table("gdel_gvectors")
       .filter(col("vec_id").isin(victim, entry)).isEmpty)
-    assert(readTable(spark, "gdel_gedges")
+    assert(spark.table("gdel_gedges")
       .filter(col("src").isin(victim, entry) ||
         col("dst").isin(victim, entry)).isEmpty)
-    assert(readTable(spark, "gdel_gentry")
+    assert(spark.table("gdel_gentry")
       .filter(col("vec_id").isin(victim, entry)).isEmpty)
-    assert(readTable(spark, "gdel_gentry").count() >= 1)
+    assert(spark.table("gdel_gentry").count() >= 1)
     val post = hits()
     assert(!post.contains(victim) && !post.contains(entry))
     graft.CacheRegistry.drain()

@@ -35,8 +35,8 @@ class PqGraphIndexSpec extends SparkSpec {
       s"PQ traversal lost more than 0.05 recall: $pq vs $plain")
 
     // traversal bytes: 8 int codes vs 64 double components per vector
-    val codeRow = graft.sinks.TableWriter.readTable(spark, "gpq_gpqcodes")
-    val vecRow = graft.sinks.TableWriter.readTable(spark, "gpq_gvectors")
+    val codeRow = spark.table("gpq_gpqcodes")
+    val vecRow = spark.table("gpq_gvectors")
     assert(codeRow.select(size(col("e"))).head().getInt(0) == 8)
     assert(vecRow.select(size(col("e"))).head().getInt(0) == 64)
     // logical bytes per vector: 8×4 vs 64×8 = 16× smaller
@@ -58,7 +58,7 @@ class PqGraphIndexSpec extends SparkSpec {
 
     // codebook is broadcast-sized: ≤ subspaces × nCent rows (empty
     // Lloyd clusters drop out; the dense LUT grid fills them with ∞)
-    val nCb = graft.sinks.TableWriter.readTable(spark, "gpq_gpqcent").count()
+    val nCb = spark.table("gpq_gpqcent").count()
     assert(nCb > 0 && nCb <= 8L * 256L)
   }
 }

@@ -21,9 +21,10 @@ class SnapshotJobsSpec extends SparkSpec {
   private val Expected = Seq(
     "read" -> 1, "readWhere" -> 4, "readWhereEq" -> 4,
     "readWhereBetween" -> 4, "readAsOf" -> 1, "commit Append" -> 5,
-    "mergeInto" -> 13, "mergeCommitIf rebase" -> 22, "deleteWhere" -> 5,
+    "mergeInto" -> 13, "mergeCommitIf rebase" -> 20, "deleteWhere" -> 5,
     "deleteVectorCommit" -> 15, "readChanges keyed" -> 8,
-    "changeFeed" -> 6, "compact" -> 5, "vacuum" -> 6)
+    "changeFeed" -> 6, "compact" -> 5, "vacuum" -> 4,
+    "deleteCommitIf rebase" -> 17)
 
   test("each table verb submits its pinned number of jobs") {
     val path = java.nio.file.Files.createTempDirectory("graft-jobs").toString + "/t"
@@ -61,6 +62,11 @@ class SnapshotJobsSpec extends SparkSpec {
     got += "changeFeed" -> consumed(SnapshotStore.changeFeed(spark, path, 1L, head))
     got += "compact" -> jobs(SnapshotStore.compact(spark, path))
     got += "vacuum" -> jobs(SnapshotStore.vacuum(spark, path, 2))
+    // the delete's rebase, last so that no earlier pin moves
+    val preparedDelete = SnapshotStore.latestVersion(path)
+    SnapshotStore.commit(rows(2000, 2010), path, SaveMode.Append)
+    got += "deleteCommitIf rebase" -> jobs(SnapshotStore.deleteCommitIf(spark, path,
+      Seq(101L).toDF("id"), "id", preparedDelete))
     val counts = got.result()
     assert(counts == Expected, counts.map { case (k, n) => s"$k=$n" }.mkString(", "))
   }

@@ -22,8 +22,8 @@ class TableWriterSpec extends SparkSpec {
     TableWriter.writeBucketed(tables.orders, "orders_b", 4, "o_custkey")
     TableWriter.writeBucketed(
       tables.customer.withColumnRenamed("c_custkey", "o_custkey"), "customer_b", 4, "o_custkey")
-    val j = TableWriter.readTable(spark, "orders_b")
-      .join(TableWriter.readTable(spark, "customer_b").hint("merge"), "o_custkey")
+    val j = spark.table("orders_b")
+      .join(spark.table("customer_b").hint("merge"), "o_custkey")
     val plan = j.queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), s"bucketed join should not shuffle:\n$plan")
     assert(j.count() == tables.orders.count())
