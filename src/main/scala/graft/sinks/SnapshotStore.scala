@@ -1,9 +1,11 @@
 package graft.sinks
 
 import java.nio.charset.StandardCharsets
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.graft.PlanTransplant
-import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, MapType,
+  StringType, StructField, StructType}
 
 /** Versioned snapshot log over parquet — the manifest layer
   * TableWriter.compact's scaladoc points at: its directory-rename swap
@@ -32,15 +34,18 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   *
   * Scale: the manifest holds file PATHS (thousands of lines at 100 TB,
   * driver-trivial); per-file PRUNING STATS live in a parquet
-  * checkpoint per version (r16 — written distributed at commit, read
-  * as a DataFrame by every pruning path, the Delta-checkpoint shape:
-  * at 10⁵–10⁷ files the stats themselves are data, never a driver
-  * map); row data moves only through distributed parquet read/write.
-  * Those stats are consulted in ONE place, [[statsPrune]]: the pruned
-  * reads, the stats-pruned rewrites (merge, MERGE INTO, delete,
-  * deletion-vector delete) and the optimistic rebase proof each hand
-  * it an exclusion over the recorded ranges, so a change to how files
-  * are ruled out lands there and nowhere else.
+  * checkpoint per version (r16 — written distributed at commit, the
+  * Delta-checkpoint shape); row data moves only through distributed
+  * parquet read/write. Those stats are consulted in ONE place,
+  * [[statsPrune]]: the pruned reads, the stats-pruned rewrites (merge,
+  * MERGE INTO, delete, deletion-vector delete) and the optimistic
+  * rebase proof each hand it an exclusion over the recorded ranges, so
+  * a change to how files are ruled out lands there and nowhere else.
+  * The prune is SIZE-ADAPTIVE: when the version's live files × tracked
+  * columns (both from metadata headers) are small, it reads the
+  * checkpoint on the driver and runs no Spark job; at 10⁵–10⁷ files,
+  * where the stats themselves are data, it is a Spark job over the
+  * checkpoint and only the surviving paths reach the driver.
   * Same-host writers serialize on the same O_EXCL lock as
   * TableWriter.compact; committers that prepared against a stale
   * snapshot go through [[commitIf]]'s optimistic conditional publish
@@ -109,6 +114,31 @@ object SnapshotStore {
     * `dataSkippingNumIndexedCols = 32` default). Declared keys always
     * record; the auto-extension fills up to this cap. */
   private val StatsAutoColumns = 32
+
+  /** The stats checkpoint's columns. Every read of a checkpoint passes
+    * this schema, so none runs a schema-inference job, and checkpoints
+    * written before the r18 string ranges null-fill `slo`/`shi`. */
+  private val StatsSchema = StructType(Seq(
+    StructField("file", StringType), StructField("column", StringType),
+    StructField("lo", LongType), StructField("hi", LongType),
+    StructField("slo", StringType), StructField("shi", StringType)))
+
+  /** The deletion-vector sidecar's columns — the ones every sidecar
+    * writer has written: [[deleteVectorCommit]]'s positions and
+    * [[vacuum]]'s GC rewrite of them (a semi-join, same columns). */
+  private val DvSchema = StructType(Seq(
+    StructField("file", StringType), StructField("path", StringType),
+    StructField("row_index", LongType)))
+
+  /** [[statsPrune]] reads the stats on the driver when the version's
+    * live files × tracked columns — both known from metadata headers —
+    * is at most this many stats rows: a few milliseconds of parquet
+    * read where the distributed join costs ≥ 3 jobs. */
+  private val LocalPruneCells = 1L << 14
+
+  /** Test seam: `true` forces [[statsPrune]]'s distributed branch
+    * whatever the table's size. */
+  private[sinks] val distributedPrune = new scala.util.DynamicVariable(false)
 
   /** Parsed manifest: FULL (`paths` defined) or DELTA (`base` = v−1,
     * `adds`/`drops` relative to it). `n` is the manifest's recorded
@@ -440,15 +470,15 @@ object SnapshotStore {
     * column falls in [lo, hi], reading ONLY the files whose recorded
     * (min, max) range overlaps the interval — the same sidecar
     * [[mergeCommit]]/[[deleteCommit]] prune their rewrites with, now
-    * applied to the read path. File pruning happens at PLAN time as a
-    * SPARK JOB over the parquet stats checkpoint (r16) — the manifest
-    * scan joins the checkpoint's rows for this column and only the
-    * surviving paths reach the driver, so pruning stays distributed at
-    * 10⁵–10⁷ files (where parquet row-group pushdown alone would still
-    * open every file's footer); the residual row filter stays in the
-    * scan, pushed to the surviving files. Files without a stats row —
-    * e.g. written by a
-    * commit that predates stats tracking — are conservatively kept. A
+    * applied to the read path. File pruning happens at PLAN time in
+    * [[statsPrune]]: a small table prunes on the driver with no job, so
+    * the read runs only its own action; at 10⁵–10⁷ files (where parquet
+    * row-group pushdown alone would still open every file's footer) the
+    * prune is a Spark job joining the manifest scan to the stats
+    * checkpoint, and only the surviving paths reach the driver. The
+    * residual row filter stays in the scan, pushed to the surviving
+    * files. Files without a stats row — e.g. written by a commit that
+    * predates stats tracking — are conservatively kept. A
     * version with NO sidecar degrades to a full read + filter, never a
     * wrong answer. */
   def readWhere(spark: SparkSession, path: String, key: String,
@@ -780,11 +810,14 @@ object SnapshotStore {
     // SCHEMA (r17): validate the batch against the table BEFORE any
     // file is written (a rejected type fork leaves zero garbage), and
     // carry the merged schema as the new version's sidecar — the O(1)
-    // resolution every read plans from. Replace commits reset it.
+    // resolution every read plans from. Replace commits reset it to
+    // the batch's schema — also the fresh files' own, which their
+    // reads below pass so that none runs an inference job.
+    val written = deepNullable(df.schema).asInstanceOf[StructType]
     val newSchema: StructType =
       if (isCarry) mergeStrict(tableSchema(df.sparkSession, path, prev),
         df.schema, path)
-      else deepNullable(df.schema).asInstanceOf[StructType]
+      else written
     val st = store(path)
     val dataDir = st.child(st.child(path, "data"),
       f"v$v%08d-${java.util.UUID.randomUUID().toString.take(8)}")
@@ -811,7 +844,7 @@ object SnapshotStore {
       val cs = tableConstraints(path)
       if (cs.nonEmpty) {
         val freshLogical = presentDf(
-          df.sparkSession.read.parquet(fresh: _*), colmap)
+          df.sparkSession.read.schema(written).parquet(fresh: _*), colmap)
         val bad = violationCounts(freshLogical, cs).filter(_._2 > 0)
         if (bad.nonEmpty) {
           st.deleteRecursively(dataDir)
@@ -939,7 +972,7 @@ object SnapshotStore {
         }
         val freshDF: Option[DataFrame] =
           if (fresh.isEmpty) None
-          else Some(meta.read.parquet(fresh: _*)
+          else Some(meta.read.schema(written).parquet(fresh: _*)
             .groupBy(input_file_name().as("f"))
             .agg(aggs.head, aggs.tail: _*)
             .select(col("f"),
@@ -1096,43 +1129,81 @@ object SnapshotStore {
     store(path).child(snapDir(path), f"v$v%08d.stats")
 
   /** The version's parquet stats CHECKPOINT (r16): per-file (column,
-    * lo, hi) range rows, written distributed at commit time and read
-    * as a DataFrame by every pruning path — the driver never holds
-    * per-file stats (the Delta checkpoint discipline; at 10⁵–10⁷
-    * files the pruning scan itself must be a Spark job). */
+    * lo, hi, slo, shi) range rows, written distributed at commit time.
+    * [[statsPrune]] reads it on the driver for a small table and as a
+    * DataFrame above that size (the Delta checkpoint discipline; at
+    * 10⁵–10⁷ files the pruning scan itself must be a Spark job). */
   private def statsCheckDir(path: String, v: Long) =
     store(path).child(snapDir(path), f"v$v%08d.statspq")
 
-  /** One chain link's stats frame: the parquet checkpoint when
-    * present, else the legacy text sidecar parallelized (bounded:
-    * legacy sidecars predate the checkpoint and are sandbox-scale). */
+  /** One chain link's stats frame: the parquet checkpoint read under
+    * [[StatsSchema]], else the legacy text sidecar as a local relation
+    * (bounded: legacy sidecars predate the checkpoint and are
+    * sandbox-scale). */
   private def statsFrameAt(spark: SparkSession, path: String, v: Long)
       : Option[DataFrame] = {
-    import org.apache.spark.sql.functions.lit
     val ck = statsCheckDir(path, v)
-    val frame =
-      if (store(path).exists(ck)) Some(spark.read.parquet(ck))
-      else {
-        val legacy = statsAllText(path, v)
-        if (legacy.isEmpty) None
-        else {
-          import spark.implicits._
-          Some(legacy.toSeq
-            .map { case ((c, f), (lo, hi)) => (f, c, lo, hi) }
-            .toDF("file", "column", "lo", "hi"))
-        }
-      }
-    // checkpoints written before the r18 string-range columns
-    // null-fill them, so chain unions stay schema-aligned
-    frame.map { df =>
-      Seq("slo", "shi").foldLeft(df) { (d, c) =>
-        if (d.columns.contains(c)) d
-        else d.withColumn(c, lit(null).cast("string"))
-      }
+    if (store(path).exists(ck)) Some(spark.read.schema(StatsSchema).parquet(ck))
+    else legacyStatsRows(path, v)
+      .map(rs => spark.createDataFrame(rs.asJava, StatsSchema))
+  }
+
+  /** One chain link's stats rows read on the driver, in
+    * [[StatsSchema]]'s layout: the checkpoint's parquet parts through
+    * parquet-hadoop over the Hadoop FileSystem (so any table root a
+    * [[LogStore]] serves), else the legacy text sidecar. */
+  private def statsRowsAt(spark: SparkSession, path: String, v: Long)
+      : Option[Seq[Row]] = {
+    import org.apache.parquet.example.data.Group
+    val st = store(path)
+    val ck = statsCheckDir(path, v)
+    if (!st.exists(ck)) legacyStatsRows(path, v)
+    else {
+      val conf = spark.sessionState.newHadoopConf()
+      val pconf = new org.apache.parquet.conf.HadoopParquetConfiguration(conf)
+      // absent (pre-r18 `slo`/`shi`) and null fields read as null
+      def field(g: Group, f: String)(get: Int => Any): Any =
+        if (g.getType.containsField(f) && g.getFieldRepetitionCount(f) > 0)
+          get(g.getType.getFieldIndex(f))
+        else null
+      // the parts a Spark read of the directory lists: hidden and
+      // `_`-prefixed names are not data
+      Some(st.list(ck).filter(e => !e.isDir && !e.name.startsWith(".") &&
+        !e.name.startsWith("_")).flatMap { e =>
+        val in = new GroupReader(org.apache.parquet.hadoop.util.HadoopInputFile
+          .fromPath(new org.apache.hadoop.fs.Path(e.path), conf), pconf).build()
+        try Iterator.continually(in.read()).takeWhile(_ != null).map { g =>
+          def str(f: String) = field(g, f)(g.getString(_, 0))
+          def long(f: String) = field(g, f)(g.getLong(_, 0))
+          Row(str("file"), str("column"), long("lo"), long("hi"),
+            str("slo"), str("shi"))
+        }.toVector
+        finally in.close()
+      })
     }
   }
 
-  /** The version's RESOLVED stats as a frame (file, column, lo, hi):
+  /** parquet-hadoop's example-`Group` reader of one file under the
+    * caller's Hadoop conf. (`ParquetReader.builder(support, path)`
+    * would load a fresh default Configuration per file: ~8 ms each.) */
+  private final class GroupReader(file: org.apache.parquet.io.InputFile,
+                                  conf: org.apache.parquet.conf.ParquetConfiguration)
+      extends org.apache.parquet.hadoop.ParquetReader.Builder[
+        org.apache.parquet.example.data.Group](file, conf) {
+    override protected def getReadSupport() =
+      new org.apache.parquet.hadoop.example.GroupReadSupport()
+  }
+
+  /** The legacy text sidecar's ranges as [[StatsSchema]] rows; None
+    * when the version has none. */
+  private def legacyStatsRows(path: String, v: Long): Option[Seq[Row]] = {
+    val legacy = statsAllText(path, v)
+    if (legacy.isEmpty) None
+    else Some(legacy.toSeq.map { case ((c, f), (lo, hi)) =>
+      Row(f, c, lo, hi, null, null) })
+  }
+
+  /** The version's RESOLVED stats as a [[StatsSchema]] frame:
     * the union of its manifest chain's checkpoints — the FULL base's
     * consolidated frame plus each delta commit's fresh-file rows. Rows
     * for since-dropped files may linger until the next checkpoint
@@ -1178,26 +1249,66 @@ object SnapshotStore {
         statsAllText(path, w).nonEmpty)
   }
 
+  /** The physical columns version `v` records ranges for, primary
+    * first: its stats header's `#key=` and `#cols=`; none without a
+    * header. */
+  private def statsColumns(path: String, v: Long): Seq[String] = {
+    val st = store(path)
+    val f = statsFile(path, v)
+    if (!st.exists(f)) Nil
+    else {
+      val lines = st.readString(f).split("\n").toSeq
+      def header(k: String) = lines.find(_.startsWith(s"#$k="))
+        .map(_.stripPrefix(s"#$k=").trim).filter(_.nonEmpty)
+      (header("key").toSeq ++ header("cols").toSeq.flatMap(_.split(","))).distinct
+    }
+  }
+
   /** THE stats prune — the only place SnapshotStore consults per-file
-    * stats. Left-joins the candidate `files` frame (one `file` column)
-    * to version `v`'s resolved stats rows for `key` and keeps every row
-    * `excl` does not exclude. `excl` is a predicate over the stats
-    * row's numeric (`lo`, `hi`) and lexicographic (`slo`, `shi`)
-    * ranges that holds only when a recorded range PROVES the file
-    * holds no matching row; a file with no range for the key is kept
-    * (conservative — degrade, never a wrong answer). The survivors
-    * stay a frame: the read and rewrite verbs collect their paths
-    * ([[prunedFiles]]), the rebase proof counts them
-    * ([[requireDisjointSince]]); the per-file stats never reach the
-    * driver. None when nothing in v's chain records stats — every
-    * candidate survives. */
+    * stats. Left-joins the candidate files (`files`, default every live
+    * file of `v`) to version `v`'s resolved stats rows for `key` and
+    * returns, sorted and distinct, every candidate `excl` does not
+    * exclude. `excl` is a predicate over the stats row's numeric (`lo`,
+    * `hi`) and lexicographic (`slo`, `shi`) ranges that holds only when
+    * a recorded range PROVES the file holds no matching row; a file
+    * with no range for the key is kept (conservative — degrade, never
+    * a wrong answer). None when nothing in v's chain records stats —
+    * every candidate survives.
+    *
+    * Size-adaptive, with ONE definition of exclusion: when v's live
+    * files × tracked columns (manifest `#n`, stats `#cols`) is at most
+    * [[LocalPruneCells]], the chain's stats rows are read on the driver,
+    * joined to the candidates in Scala, and `excl` is evaluated over a
+    * local relation — the optimizer folds the filter, so the prune runs
+    * no job. Above that, the join is a Spark job over the manifest scan
+    * and the stats checkpoint, and only the survivors reach the driver;
+    * the per-file stats never do. */
   private def statsPrune(spark: SparkSession, path: String, v: Long,
-                         key: String, excl: Column)
-                        (files: => DataFrame): Option[DataFrame] = {
+                         key: String, excl: Column,
+                         files: Option[Seq[String]] = None)
+      : Option[Seq[String]] = {
     import org.apache.spark.sql.functions.col
-    statsDF(spark, path, v).map { st =>
-      files.join(st.filter(col("column") === key), Seq("file"), "left")
-        .filter(!excl || col("column").isNull)
+    val meta = metaSession(spark)
+    import meta.implicits._
+    val keep = !excl || col("column").isNull
+    if (!distributedPrune.value &&
+        nFiles(path, v) * math.max(1, statsColumns(path, v).size) <=
+          LocalPruneCells) {
+      val (fullV, deltas) = chainOf(path, v)
+      val links = (fullV +: deltas.map(_._1)).flatMap(statsRowsAt(meta, path, _))
+      Option.when(links.nonEmpty) {
+        val byFile = links.flatten.filter(_.getString(1) == key)
+          .groupBy(_.getString(0))
+        val joined = files.getOrElse(manifest(path, v)).flatMap(f =>
+          byFile.getOrElse(f, Seq(Row(f, null, null, null, null, null))))
+        meta.createDataFrame(joined.asJava, StatsSchema).filter(keep)
+          .select("file").as[String].collect().toSeq.distinct.sorted
+      }
+    } else statsDF(meta, path, v).map { st =>
+      files.fold(manifestDF(meta, path, v))(_.toDF("file"))
+        .join(st.filter(col("column") === key), Seq("file"), "left")
+        .filter(keep).select("file").distinct().as[String].collect()
+        .toSeq.sorted
     }
   }
 
@@ -1209,19 +1320,12 @@ object SnapshotStore {
   }
 
   /** FILE paths of version `v` that may hold rows `excl` cannot rule
-    * out — [[statsPrune]] over the distributed manifest scan, with only
-    * the SURVIVORS collected (the minimum any engine needs to plan a
-    * scan or a rewrite). With no stats at all, every file survives. */
+    * out — [[statsPrune]] over every live file (on the driver for a
+    * small table, a Spark job above that). With no stats at all, every
+    * file survives. */
   private def prunedFiles(spark: SparkSession, path: String, v: Long,
-                          key: String, excl: Column): Seq[String] = {
-    val meta = metaSession(spark)
-    import meta.implicits._
-    statsPrune(meta, path, v, key, excl)(manifestDF(meta, path, v)) match {
-      case None => manifest(path, v)
-      case Some(kept) =>
-        kept.select("file").distinct().as[String].collect().toSeq.sorted
-    }
-  }
+                          key: String, excl: Column): Seq[String] =
+    statsPrune(spark, path, v, key, excl).getOrElse(manifest(path, v))
 
   private def dropStatsArtifacts(path: String, v: Long): Unit = {
     val st = store(path)
@@ -1302,14 +1406,8 @@ object SnapshotStore {
 
   /** The column a version's stats sidecar tracks (its `#key=` header),
     * if any — lets maintenance commits preserve the pruning layer. */
-  private def statsKeyOf(path: String, v: Long): Option[String] = {
-    val st = store(path)
-    val f = statsFile(path, v)
-    if (!st.exists(f)) None
-    else st.readString(f)
-      .split("\n").find(_.startsWith("#key="))
-      .map(_.stripPrefix("#key=").trim).filter(_.nonEmpty)
-  }
+  private def statsKeyOf(path: String, v: Long): Option[String] =
+    statsColumns(path, v).headOption
 
   // ——— column mapping (r16): rename/drop without rewriting data ———
 
@@ -1460,28 +1558,18 @@ object SnapshotStore {
   private def metadataCommit(path: String, v: Long,
                              mapping: Seq[(String, String)]): Long = {
     dropDvDir(path, v + 1) // stale crashed tombstones (commitLocked rule)
-    val lst = store(path)
-    val st = statsFile(path, v)
-    if (lst.exists(st)) {
-      // the stats header names PHYSICAL columns; a dropColumn must not
-      // carry a dropped column forward as the tracked key — the next
-      // mergeCommit/deleteCommit would aggregate min/max over a column
-      // absent from its fresh files and fail. Keep only columns the
-      // new mapping still presents; promote the first survivor to
-      // #key= if the key itself was dropped; no survivors → no header.
-      val live = mapping.map(_._2).toSet
-      val lines = lst.readString(st).split("\n")
-      val key = lines.find(_.startsWith("#key="))
-        .map(_.stripPrefix("#key=").trim).filter(_.nonEmpty)
-      val cols = lines.find(_.startsWith("#cols="))
-        .map(_.stripPrefix("#cols=").trim.split(",").toSeq)
-        .getOrElse(key.toSeq)
-      val kept = (key.toSeq ++ cols).distinct.filter(live)
-      // partition columns persist through rename/drop commits too —
-      // minus any physical column the new mapping no longer presents
-      if (kept.nonEmpty)
-        writeStatsHeader(path, v + 1, kept, partsOf(path, v).filter(live))
-    }
+    // the stats header names PHYSICAL columns; a dropColumn must not
+    // carry a dropped column forward as the tracked key — the next
+    // mergeCommit/deleteCommit would aggregate min/max over a column
+    // absent from its fresh files and fail. Keep only columns the
+    // new mapping still presents; promote the first survivor to
+    // #key= if the key itself was dropped; no survivors → no header.
+    val live = mapping.map(_._2).toSet
+    val kept = statsColumns(path, v).filter(live)
+    // partition columns persist through rename/drop commits too —
+    // minus any physical column the new mapping no longer presents
+    if (kept.nonEmpty)
+      writeStatsHeader(path, v + 1, kept, partsOf(path, v).filter(live))
     publishSameFiles(path, v, Some(mapping))
   }
 
@@ -1562,7 +1650,7 @@ object SnapshotStore {
     val dirs = dvVisible(path, v)._2.map(dvDir(path, _))
       .filter(store(path).exists)
     if (dirs.isEmpty) None
-    else Some(spark.read.parquet(dirs: _*))
+    else Some(spark.read.schema(DvSchema).parquet(dirs: _*))
   }
 
   /** Apply version `v`'s deletion vectors to a frame scanned from this
@@ -1748,7 +1836,8 @@ object SnapshotStore {
       .map(dvDir(path, _)).filter(store(path).exists)
     val dvDel: Option[DataFrame] =
       if (dvNewDirs.isEmpty) None
-      else carriedRows(minusMasks(spark.read.parquet(dvNewDirs: _*),
+      else carriedRows(minusMasks(
+        spark.read.schema(DvSchema).parquet(dvNewDirs: _*),
         if (resetInRange) dvFrame(spark, path, fromV) else None))
     // resurrection arm: only a restore can UNMASK rows in place (files
     // the range itself added/removed ride the file diff)
@@ -2063,9 +2152,9 @@ object SnapshotStore {
     *     [[VersionConflictException]]: the prepared rows may depend on
     *     rows the winner changed; auto-merge would be a lost update.
     *
-    * The proof is the same distributed stats-checkpoint join the
-    * pruning paths use — per intervening version, one small job over
-    * its changed-file set; never a driver stats map. */
+    * The proof is the pruning paths' own [[statsPrune]] over each
+    * intervening version's changed-file set — no job on a small table,
+    * one small job per version above that size. */
   def mergeCommitIf(spark: SparkSession, path: String, df: DataFrame,
                     key: String, expectedVersion: Long): Long =
     withLock(path) {
@@ -2163,13 +2252,17 @@ object SnapshotStore {
       require(matched.nonEmpty || notMatched.nonEmpty,
         "mergeInto: need at least one WHEN clause")
       val pk = physicalOf(path, v, key)
-      val dups = source.groupBy(col(key)).count()
-        .filter(col("count") > 1).limit(1).count()
-      require(dups == 0,
+      // one aggregate for the duplicate check and the key bounds: rows
+      // beyond the distinct non-null keys plus one for any null key are
+      // duplicates (two null keys collide like two equal ones)
+      val b = source.agg(count(lit(1)), countDistinct(col(key)),
+        coalesce(max(col(key).isNull.cast("long")), lit(0L)),
+        min(col(key)).cast("long"), max(col(key)).cast("long")).head()
+      require(b.getLong(0) == b.getLong(1) + b.getLong(2),
         s"mergeInto: source has duplicate values of '$key' - a target " +
           "row matching several source rows is nondeterministic")
-      val (bLo, bHi) =
-        batchBounds(source, key, s"mergeInto: empty source for $path")
+      require(!b.isNullAt(3), s"mergeInto: empty source for $path")
+      val (bLo, bHi) = (b.getLong(3), b.getLong(4))
       val touched = prunedFiles(spark, path, v, pk, outside(bLo, bHi))
       val mapping = columnMapping(path, v)
       // all clause expressions run over LOGICAL names; the commit
@@ -2308,22 +2401,21 @@ object SnapshotStore {
     * must have a recorded stats range for `key` disjoint from
     * [bLo, bHi]. Per version, the changed-file set is the small
     * manifest diff (paths only on the driver — commits add/rewrite few
-    * files by construction); their ranges are looked up by JOINING the
-    * version's stats checkpoint, same discipline as the pruning paths.
+    * files by construction); their ranges are looked up through
+    * [[statsPrune]], the pruning paths' own join.
     * Any overlapping or range-less changed file throws
     * [[VersionConflictException]] — unprovable means abort, never a
     * silent lost update. */
   private def requireDisjointSince(spark: SparkSession, path: String,
                                    fromV: Long, toV: Long, key: String,
                                    bounds: (Long, Long)): Unit = {
-    import spark.implicits._
     require(fromV >= 1 && fromV < toV,
       s"snapshot commit: $path at v$toV, prepared against v$fromV")
     val (bLo, bHi) = bounds
     def conflicts(files: Seq[String], statsV: Long): Long =
       if (files.isEmpty) 0L
-      else statsPrune(spark, path, statsV, key, outside(bLo, bHi))(
-        files.toDF("file")).fold(files.size.toLong)(_.count()) // no stats → unprovable
+      else statsPrune(spark, path, statsV, key, outside(bLo, bHi), Some(files))
+        .fold(files.size)(_.size).toLong // no stats → unprovable
     ((fromV + 1) to toV).foreach { w =>
       // a vacuumed intervening version makes disjointness UNPROVABLE,
       // not an internal error: surface it as the retryable conflict
@@ -2838,7 +2930,7 @@ object SnapshotStore {
       dvVisible(path, v)._2.foreach { w =>
         val d = dvDir(path, w)
         if (st.exists(d)) {
-          val rows = spark.read.parquet(d)
+          val rows = spark.read.schema(DvSchema).parquet(d)
           val liveDf = live.toDF("path")
           val kept = rows.join(liveDf, Seq("path"), "left_semi")
           // both counts in one aggregate: all rows, and those whose

@@ -78,6 +78,24 @@ class MergeIntoSpec extends SparkSpec {
     }
   }
 
+  test("a repeated null source key is a duplicate, reported before an empty source") {
+    val path = fresh()
+    SnapshotStore.commit(Seq((1L, "a", 1L)).toDF("id", "st", "v"), path)
+    def merge(src: org.apache.spark.sql.DataFrame) = SnapshotStore.mergeInto(
+      spark, path, src, "id", matched = Seq(MergeUpdate(Map("v" -> "s.v"))))
+    def error(src: org.apache.spark.sql.DataFrame) =
+      intercept[IllegalArgumentException](merge(src)).getMessage
+    val nulls = Seq[(Option[Long], Long)]((None, 1L), (None, 2L)).toDF("id", "v")
+    // two null keys and no non-null one: the duplicate error wins
+    assert(error(nulls).contains("duplicate values of 'id'"))
+    // one null key: no duplicate, but no key to bound the merge by
+    assert(error(nulls.limit(1)).contains("empty source"))
+    // one null key beside a distinct non-null key: neither error, and
+    // the null key matches nothing
+    merge(Seq[(Option[Long], Long)]((None, 5L), (Some(1L), 9L)).toDF("id", "v"))
+    assert(rows(path) == Set((1L, "a", 9L)))
+  }
+
   test("SQL-text MERGE INTO parses the full clause ladder and commits (r17)") {
     val path = fresh()
     SnapshotStore.commit(

@@ -18,13 +18,15 @@ class SnapshotJobsSpec extends SparkSpec {
       concat(lit("2024-01-0"), (col("id") % 4 + 1).cast("string")).as("day"),
       (col("id") * 7).as("v"))
 
+  /** The table is small, so every stats prune runs on the driver: a
+    * pruned read runs only its action, like `read`. */
   private val Expected = Seq(
-    "read" -> 1, "readWhere" -> 4, "readWhereEq" -> 4,
-    "readWhereBetween" -> 4, "readAsOf" -> 1, "commit Append" -> 5,
-    "mergeInto" -> 13, "mergeCommitIf rebase" -> 20, "deleteWhere" -> 5,
-    "deleteVectorCommit" -> 15, "readChanges keyed" -> 8,
-    "changeFeed" -> 6, "compact" -> 5, "vacuum" -> 4,
-    "deleteCommitIf rebase" -> 17)
+    "read" -> 1, "readWhere" -> 1, "readWhereEq" -> 1,
+    "readWhereBetween" -> 1, "readAsOf" -> 1, "commit Append" -> 4,
+    "mergeInto" -> 6, "mergeCommitIf rebase" -> 5, "deleteWhere" -> 4,
+    "deleteVectorCommit" -> 6, "readChanges keyed" -> 6,
+    "changeFeed" -> 4, "compact" -> 3, "vacuum" -> 3,
+    "deleteCommitIf rebase" -> 6)
 
   test("each table verb submits its pinned number of jobs") {
     val path = java.nio.file.Files.createTempDirectory("graft-jobs").toString + "/t"

@@ -930,56 +930,63 @@ class SnapshotStoreSpec extends SparkSpec {
     assert(miss.count() == 0 && hit.count() == 2)
   }
 
-  test("stats checkpoint: pruning plans from a parquet frame, the driver never holds per-file stats") {
-    val path = freshTable()
-    // a many-file table: 1024 range-disjoint files (the tools probe
-    // runs the same shape at 10⁴ files — see StatsCheckpointProbe)
-    SnapshotStore.commit(
-      spark.range(0, 65536).select(col("id"), (col("id") * 3).as("v"))
-        .repartitionByRange(1024, col("id")).sortWithinPartitions("id"),
-      path, statsKey = Some("id"))
-    val snap = new java.io.File(path, "_snapshots")
-    // per-file ranges live in the parquet CHECKPOINT, not on the driver:
-    // the text sidecar carries only the constant-size #key header
-    val ck = new java.io.File(snap, "v00000001.statspq")
-    assert(ck.exists() && ck.isDirectory)
-    val headerOnly = new String(java.nio.file.Files.readAllBytes(
-      new java.io.File(snap, "v00000001.stats").toPath), "UTF-8")
-    // no per-file body lines; the header records the declared key plus
-    // the auto-extended all-column list (r18)
-    assert(headerOnly.trim == "#key=id\n#cols=id,v")
-    // the checkpoint holds one range row per (file × tracked column) —
-    // two columns since the r18 all-column extension
-    assert(spark.read.parquet(ck.getPath).count() == 2048)
-    // readWhere: distributed prune → a point-range scan opens ~1 of
-    // 1024 files and answers exactly
-    val w = SnapshotStore.readWhere(spark, path, "id", 5000, 5003)
-    assert(w.inputFiles.length <= 2)
-    assert(w.select("v").as[Long].collect().sorted.toSeq ==
-      Seq(15000L, 15003L, 15006L, 15009L))
-    // an append's checkpoint holds ONLY its fresh files' rows (r17:
-    // the O(delta) commit — the chain resolves the rest); pruning
-    // still sees all 1026 ranges through the chain union
-    SnapshotStore.commit(
-      spark.range(65536, 65600).select(col("id"), (col("id") * 3).as("v"))
-        .repartitionByRange(2, col("id")).sortWithinPartitions("id"),
-      path, SaveMode.Append, statsKey = Some("id"))
-    assert(spark.read.parquet(
-      new java.io.File(snap, "v00000002.statspq").getPath).count() == 4)
-    // chain-resolved prune: a point read in the APPENDED range opens
-    // ~1 of 1026 files, and one in the BASE range still prunes too
-    val w2 = SnapshotStore.readWhere(spark, path, "id", 65590, 65591)
-    assert(w2.inputFiles.length <= 2)
-    assert(w2.count() == 2)
-    // mergeCommit prunes from the checkpoint: a point merge touches
-    // ONE of the 1026 files, every other file carried by reference
-    val before = SnapshotStore.read(spark, path).inputFiles.toSet
-    SnapshotStore.mergeCommit(spark, path,
-      Seq((300L, -1L)).toDF("id", "v"), "id")
-    val after = SnapshotStore.read(spark, path)
-    assert(after.inputFiles.toSet.intersect(before).size == before.size - 1)
-    assert(after.filter(col("id") === 300).select("v").as[Long].head() == -1L)
-    assert(after.count() == 65600)
+  test("stats checkpoint: 1024-file prune, driver and distributed branches") {
+    // 2048 stats rows: small enough for the driver-side prune; the
+    // forced-distributed run checks the Spark-job prune on the same
+    // table shape, assertion for assertion
+    def check(): Unit = {
+      val path = freshTable()
+      // a many-file table: 1024 range-disjoint files (the tools probe
+      // runs the same shape at 10⁴ files — see StatsCheckpointProbe)
+      SnapshotStore.commit(
+        spark.range(0, 65536).select(col("id"), (col("id") * 3).as("v"))
+          .repartitionByRange(1024, col("id")).sortWithinPartitions("id"),
+        path, statsKey = Some("id"))
+      val snap = new java.io.File(path, "_snapshots")
+      // per-file ranges live in the parquet CHECKPOINT, not on the driver:
+      // the text sidecar carries only the constant-size #key header
+      val ck = new java.io.File(snap, "v00000001.statspq")
+      assert(ck.exists() && ck.isDirectory)
+      val headerOnly = new String(java.nio.file.Files.readAllBytes(
+        new java.io.File(snap, "v00000001.stats").toPath), "UTF-8")
+      // no per-file body lines; the header records the declared key plus
+      // the auto-extended all-column list (r18)
+      assert(headerOnly.trim == "#key=id\n#cols=id,v")
+      // the checkpoint holds one range row per (file × tracked column) —
+      // two columns since the r18 all-column extension
+      assert(spark.read.parquet(ck.getPath).count() == 2048)
+      // readWhere: the stats prune → a point-range scan opens ~1 of
+      // 1024 files and answers exactly
+      val w = SnapshotStore.readWhere(spark, path, "id", 5000, 5003)
+      assert(w.inputFiles.length <= 2)
+      assert(w.select("v").as[Long].collect().sorted.toSeq ==
+        Seq(15000L, 15003L, 15006L, 15009L))
+      // an append's checkpoint holds ONLY its fresh files' rows (r17:
+      // the O(delta) commit — the chain resolves the rest); pruning
+      // still sees all 1026 ranges through the chain union
+      SnapshotStore.commit(
+        spark.range(65536, 65600).select(col("id"), (col("id") * 3).as("v"))
+          .repartitionByRange(2, col("id")).sortWithinPartitions("id"),
+        path, SaveMode.Append, statsKey = Some("id"))
+      assert(spark.read.parquet(
+        new java.io.File(snap, "v00000002.statspq").getPath).count() == 4)
+      // chain-resolved prune: a point read in the APPENDED range opens
+      // ~1 of 1026 files, and one in the BASE range still prunes too
+      val w2 = SnapshotStore.readWhere(spark, path, "id", 65590, 65591)
+      assert(w2.inputFiles.length <= 2)
+      assert(w2.count() == 2)
+      // mergeCommit prunes from the checkpoint: a point merge touches
+      // ONE of the 1026 files, every other file carried by reference
+      val before = SnapshotStore.read(spark, path).inputFiles.toSet
+      SnapshotStore.mergeCommit(spark, path,
+        Seq((300L, -1L)).toDF("id", "v"), "id")
+      val after = SnapshotStore.read(spark, path)
+      assert(after.inputFiles.toSet.intersect(before).size == before.size - 1)
+      assert(after.filter(col("id") === 300).select("v").as[Long].head() == -1L)
+      assert(after.count() == 65600)
+    }
+    check()
+    SnapshotStore.distributedPrune.withValue(true)(check())
   }
 
   test("optimistic merge/delete: provably disjoint concurrent commits both land, overlap aborts") {
